@@ -29,6 +29,14 @@ object HarnessConf {
       Map("spark.io.compression.codec" -> "zstd")
     else Map.empty
 
+  /** GRAFT_STREAM_PARTITIONS (default 4) caps `spark.sql.shuffle.partitions`
+    * while a `graft.ops.StreamingQueries` stream runs: the state store
+    * writes one file per shuffle partition per stateful operator per
+    * micro-batch, so at gate/bench scale that fixed IO, not the data,
+    * sets a stream's time. Sessions with fewer partitions keep theirs.
+    */
+  val streamPartitions: Int = sys.env.getOrElse("GRAFT_STREAM_PARTITIONS", "4").toInt
+
   /** All shared dev/soak session extras, applied by Bench and Verify. */
   val extraConf: Map[String, String] = stateStoreConf ++ shuffleCodecConf
 }

@@ -1,10 +1,10 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{HarnessConf, Q, Tables}
 import graft.streaming.EventsStream
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 
 /** Structured Streaming pipelines under the DuckDB oracle gate: each
   * query REALLY runs the streaming engine — `readStream` over the events
@@ -29,15 +29,6 @@ import org.apache.spark.sql.streaming.{OutputMode, Trigger}
   */
 object StreamingQueries {
 
-  /** Drive a streaming frame through the engine with AvailableNow and
-    * return the drained sink as a DataFrame.
-    *
-    * The state store materializes one file per shuffle partition per
-    * operator per micro-batch; at the oracle/bench scale that fixed IO
-    * dwarfs the data, so the stream runs with a bounded partition count
-    * (state sharding is per-key within a partition — results are
-    * identical; a 100 TB deployment raises it back via the same conf).
-    */
   /** Scratch dirs (checkpoints, staged inputs, drained sinks) go to
     * tmpfs when the platform has one: the state store fsyncs one delta
     * file per partition per operator per micro-batch, and on a disk-backed
@@ -53,15 +44,20 @@ object StreamingQueries {
   // nested offsets/commits/state subtrees after dir creation — a recursive
   // shutdown hook is the only way the tmpfs scratch actually gets freed.
   private lazy val scratchCleanup: Unit = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      scratchRoots.forEach { root =>
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-          f.delete(); ()
-        }
-        rm(root)
-      }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() => scratchRoots.forEach(rm)))
     ()
+  }
+
+  private def rm(f: java.io.File): Unit = {
+    Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
+    f.delete(); ()
+  }
+
+  /** Free one scratch dir now rather than at JVM exit. */
+  private def dropScratch(path: String): Unit = {
+    val f = new java.io.File(path)
+    rm(f)
+    scratchRoots.remove(f); ()
   }
 
   // tmpfs scratch competes with the JVM heap for physical RAM: guard on
@@ -120,62 +116,122 @@ object StreamingQueries {
   @volatile private[graft] var w16LastCkpt: String = _
   @volatile private[graft] var w18LastCkpt: String = _
 
-  private def runStream(spark: SparkSession, name: String, df: DataFrame,
-      mode: OutputMode): DataFrame = {
-    spark.catalog.dropTempView(name)
+  /** Where a stream's rows go: configures the sink of its writer. */
+  private[graft] type Sink = DataStreamWriter[Row] => DataStreamWriter[Row]
+
+  private[graft] def batchSink(f: (DataFrame, Long) => Unit): Sink =
+    _.foreachBatch(f)
+
+  /** Drive a streaming frame through the engine with AvailableNow into
+    * `sink`, returning once the query has drained its input. The only
+    * place in `graft.ops` that starts a streaming query.
+    *
+    * The state store materializes one file per shuffle partition per
+    * operator per micro-batch; at the oracle/bench scale that fixed IO
+    * dwarfs the data, so the stream runs with a bounded partition count
+    * (state sharding is per-key within a partition — results are
+    * identical; a 100 TB deployment raises it back via the same conf).
+    * The session's own count is restored however the run ends.
+    *
+    * Without `checkpoint` the runner makes a scratch checkpoint and
+    * deletes it once the query has terminated; a caller-supplied one
+    * (w16/w18 restart from it, PlanSpec reads its logs) is kept.
+    */
+  private[graft] def runStream(spark: SparkSession, name: String, df: DataFrame,
+      mode: OutputMode, sink: Sink, checkpoint: Option[String] = None): Unit = {
+    val ckpt = checkpoint.getOrElse(fastTmpDir(s"graft_ckpt_$name"))
     val key = "spark.sql.shuffle.partitions"
     val saved = spark.conf.get(key)
-    val target = sys.env.getOrElse("GRAFT_STREAM_PARTITIONS", "4").toInt
-    if (saved.toInt > target) spark.conf.set(key, target.toString)
-    val out = fastTmpDir(s"graft_sink_$name")
-    val append = mode == OutputMode.Append()
-    try {
-      // Append-mode streams sink STRAIGHT to parquet: the file sink's
-      // tasks write their partitions executor-side and send only commit
-      // metadata to the driver, so the result size never touches
-      // spark.driver.maxResultSize. The memory sink, by contrast, ships
-      // every task's ROWS to the driver inside the micro-batch itself —
-      // at sf100 w14's joined output (1.05 GB serialized) and w15's
-      // session frame (1.8 GB) aborted the stage on maxResultSize
-      // (round-12 soak). This is also exactly what a production 100 TB
-      // deployment does: writeStream.format("parquet") with the same
-      // transforms and plan shape (shuffle on group keys, state-store
-      // sharding by key, watermark eviction).
-      // Complete-mode aggregates keep the memory sink — the file sink
-      // only supports Append, and a Complete result is bounded by the
-      // group-key cardinality, not the corpus.
-      val writer0 = df.writeStream
+    if (saved.toInt > HarnessConf.streamPartitions)
+      spark.conf.set(key, HarnessConf.streamPartitions.toString)
+    try sink(df.writeStream
         .outputMode(mode)
-        .option("checkpointLocation", fastTmpDir(s"graft_ckpt_$name"))
-        .trigger(Trigger.AvailableNow())
-      // The overwrite-per-batch drain below is CORRECT ONLY for
-      // Complete mode (each batch re-emits the full result). An
-      // Update-mode stream would keep only the last batch's changed
-      // rows — fail loudly rather than return a silently-partial
-      // result if a future caller passes Update.
-      require(append || mode == OutputMode.Complete(),
-        s"runStream($name): unsupported output mode $mode — only " +
-          "Append (file sink) and Complete (overwrite drain) are wired")
-      val q =
-        if (append) writer0.format("parquet").option("path", out).start()
-        else writer0.foreachBatch { (b: DataFrame, _: Long) =>
-          // Complete mode re-emits the FULL updated result each batch:
-          // overwrite the snapshot, executor-side — the last batch leaves
-          // the complete answer as parquet. The memory sink used here
-          // before round 13 collected the result to the driver inside
-          // the micro-batch; at sf100 w4's per-user session result
-          // (corpus-scale group cardinality) kernel-OOM-killed the JVM
-          // at 68 GB RSS. foreachBatch + parquet keeps rows executor-side
-          // whatever the group cardinality.
-          b.write.mode("overwrite").parquet(out); ()
-        }.start()
-      q.awaitTermination()
-    } finally spark.conf.set(key, saved)
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()))
+      .start().awaitTermination()
+    finally spark.conf.set(key, saved)
+    if (checkpoint.isEmpty) dropScratch(ckpt)
+  }
+
+  /** [[runStream]] into a fresh scratch sink, read back as a DataFrame.
+    *
+    * Append-mode streams sink STRAIGHT to parquet: the file sink's tasks
+    * write their partitions executor-side and send only commit metadata
+    * to the driver, so the result size never touches
+    * spark.driver.maxResultSize (the memory sink used before round 13
+    * aborted w14 and w15 on it at sf100). Complete mode re-emits the FULL
+    * updated result each batch, and the file sink only supports Append:
+    * a `foreachBatch` overwrites the snapshot executor-side, so the last
+    * batch leaves the complete answer as parquet whatever the group
+    * cardinality (the memory sink kernel-OOM-killed w4's sf100 JVM).
+    */
+  private def drained(spark: SparkSession, name: String, df: DataFrame,
+      mode: OutputMode): DataFrame = {
+    // the overwrite drain is CORRECT ONLY for Complete mode: an Update
+    // stream would keep only the last batch's changed rows
+    require(mode == OutputMode.Append() || mode == OutputMode.Complete(),
+      s"drained($name): unsupported output mode $mode — only " +
+        "Append (file sink) and Complete (overwrite drain) are wired")
+    val out = fastTmpDir(s"graft_sink_$name")
+    runStream(spark, name, df, mode,
+      if (mode == OutputMode.Append()) _.format("parquet").option("path", out)
+      else batchSink((b, _) => b.write.mode("overwrite").parquet(out)))
     // explicit schema on the read-back: an append-mode stream that
     // legitimately emits zero rows leaves a metadata log with zero
     // committed files (and a zero-batch Complete run writes nothing),
     // where schema inference would fail
     spark.read.schema(df.schema).parquet(out)
+  }
+
+  /** Keyed versioned snapshots under `root`, the foreachBatch upsert of
+    * w11/w16/w17: batch k merges its rows into snapshot k-1 and writes
+    * snapshot k, so the last snapshot is the merged state.
+    */
+  private final class Snapshots(root: String,
+      merge: (Option[DataFrame], DataFrame) => DataFrame) {
+    @volatile private var current: Option[String] = None
+    val sink: Sink = batchSink { (batch, batchId) =>
+      val out = s"$root/v$batchId"
+      merge(current.map(batch.sparkSession.read.parquet(_)), batch)
+        .write.mode("overwrite").parquet(out)
+      current = Some(out)
+    }
+    def latest(spark: SparkSession, name: String): DataFrame =
+      spark.read.parquet(current.getOrElse(sys.error(s"$name: no micro-batch ran")))
+  }
+
+  /** The keyed upsert of the update-mode tumbling counts (w16/w17): a
+    * batch's rows replace the snapshot rows of the same (window,
+    * event_type) — update mode re-emits a window whenever a batch
+    * changes it, so the latest emission is the current count.
+    */
+  private def windowUpsert(root: String): Snapshots = {
+    val keys = Seq("window_start", "event_type")
+    new Snapshots(root, { (prev, batch) =>
+      val b = batch.select((keys ++ Seq("n", "sum_value")).map(col): _*)
+      prev.fold(b)(_.join(b.select(keys.map(col): _*), keys, "left_anti").union(b))
+    })
+  }
+
+  /** foreachBatch sink writing `roll(batch)` to `$root/b$batchId` — the
+    * incremental-apply streams (w22–w25), whose per-batch verdicts are
+    * final because each key lives in exactly one staged file.
+    */
+  private final class BatchDirs(root: String, roll: DataFrame => DataFrame) {
+    private val written = scala.collection.mutable.ListBuffer.empty[String]
+    val sink: Sink = batchSink { (b, batchId) =>
+      val out = s"$root/b$batchId"
+      roll(b).write.mode("overwrite").parquet(out)
+      written.synchronized { written += out; () }
+    }
+    // foreachBatch is at-least-once: a replayed batchId appends its path
+    // twice while the write itself is idempotent (mode overwrite) —
+    // distinct keeps the final read idempotent end-to-end
+    def all(spark: SparkSession, name: String): DataFrame = {
+      val dirs = written.synchronized(written.toSeq.distinct)
+      require(dirs.nonEmpty, s"$name: no micro-batch ran")
+      spark.read.parquet(dirs: _*)
+    }
   }
 
   /** The test tables are single parquet FILES; the file streaming source
@@ -283,7 +339,7 @@ object StreamingQueries {
       |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin) { (spark, dir) =>
     val stream = EventsStream.tumblingCounts(
       EventsStream.read(spark, eventsPath(spark, dir)))
-    runStream(spark, "w3_stream_tumbling", stream, OutputMode.Complete())
+    drained(spark, "w3_stream_tumbling", stream, OutputMode.Complete())
       .orderBy("window_start", "event_type")
   }
 
@@ -311,7 +367,7 @@ object StreamingQueries {
       |ORDER BY user_id, session_start""".stripMargin) { (spark, dir) =>
     val stream = EventsStream.sessionCounts(
       EventsStream.read(spark, eventsPath(spark, dir)))
-    runStream(spark, "w4_stream_session", stream, OutputMode.Complete())
+    drained(spark, "w4_stream_session", stream, OutputMode.Complete())
       .orderBy("user_id", "session_start")
   }
 
@@ -331,7 +387,7 @@ object StreamingQueries {
     val stream = EventsStream.dedupedEvents(twice)
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value").cast("double").as("value"))
-    runStream(spark, "w5_stream_dedup", stream, OutputMode.Append())
+    drained(spark, "w5_stream_dedup", stream, OutputMode.Append())
       .orderBy("event_id")
   }
 
@@ -402,7 +458,7 @@ object StreamingQueries {
       .select(col("purchase_id"), col("p_user").as("user_id"),
         col("p_ts").as("purchase_ts"), col("c_ts").as("click_ts"),
         (unix_micros(col("p_ts")) - unix_micros(col("c_ts"))).as("gap_us"))
-    runStream(spark, "w7_stream_join", joined, OutputMode.Append())
+    drained(spark, "w7_stream_join", joined, OutputMode.Append())
       .orderBy("purchase_id", "click_ts")
   }
 
@@ -432,7 +488,7 @@ object StreamingQueries {
       |GROUP BY 1, 2, 3 ORDER BY window_start, event_type""".stripMargin) { (spark, dir) =>
     val stream = EventsStream.hoppingCounts(
       EventsStream.read(spark, eventsPath(spark, dir)))
-    runStream(spark, "w12_stream_hopping", stream, OutputMode.Complete())
+    drained(spark, "w12_stream_hopping", stream, OutputMode.Complete())
       .orderBy("window_start", "event_type")
   }
 
@@ -454,7 +510,7 @@ object StreamingQueries {
     val stream = EventsStream.enrichedNationCounts(
       EventsStream.read(spark, eventsPath(spark, dir)),
       Tables.customer(spark, dir))
-    runStream(spark, "w10_stream_static_join", stream, OutputMode.Complete())
+    drained(spark, "w10_stream_static_join", stream, OutputMode.Complete())
       .orderBy("window_start", "nation")
   }
 
@@ -489,37 +545,22 @@ object StreamingQueries {
       |SELECT user_id, event_id AS last_event_id, ts AS last_ts,
       |       event_type AS last_type, value AS last_value
       |FROM ranked WHERE rn = 1 ORDER BY user_id""".stripMargin) { (spark, dir) =>
-    val root = fastTmpDir("graft_upsert_w11")
     val latestW = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("ts").desc, col("event_id").desc)
     def latestPerKey(df: DataFrame): DataFrame = df
       .withColumn("rn", row_number().over(latestW))
       .filter(col("rn") === 1).drop("rn")
-    @volatile var current: Option[String] = None
+    val snaps = new Snapshots(fastTmpDir("graft_upsert_w11"), { (prev, batch) =>
+      // collapse the batch to its per-key winners BEFORE touching
+      // state — merge IO is then O(|keys in batch|)
+      val winners = latestPerKey(batch)
+      prev.fold(winners)(p => latestPerKey(p.union(winners)))
+    })
     val src = EventsStream.read(spark, eventsPath(spark, dir))
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
         col("value"))
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        // collapse the batch to its per-key winners BEFORE touching
-        // state — merge IO is then O(|keys in batch|)
-        val winners = latestPerKey(batch)
-        val merged = current match {
-          case None => winners
-          case Some(prev) => latestPerKey(s.read.parquet(prev).union(winners))
-        }
-        val out = s"$root/v$batchId"
-        merged.write.mode("overwrite").parquet(out)
-        current = Some(out)
-        ()
-      }
-      .option("checkpointLocation", fastTmpDir("graft_ckpt_w11"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(current.getOrElse(
-      sys.error("w11: no micro-batch ran")))
+    runStream(spark, "w11_stream_upsert", src, OutputMode.Append(), snaps.sink)
+    snaps.latest(spark, "w11")
       .select(col("user_id"), col("event_id").as("last_event_id"),
         col("ts").as("last_ts"), col("event_type").as("last_type"),
         col("value").cast("double").as("last_value"))
@@ -635,7 +676,7 @@ object StreamingQueries {
       |  ON p.user_id = c.user_id
       | AND c.ts >= p.ts - INTERVAL 10 MINUTE AND c.ts < p.ts
       |ORDER BY purchase_id, click_ts""".stripMargin) { (spark, dir) =>
-    runStream(spark, "w13_stream_outer_join", w13Joined(spark, dir), OutputMode.Append())
+    drained(spark, "w13_stream_outer_join", w13Joined(spark, dir), OutputMode.Append())
       .orderBy("purchase_id", "click_ts")
   }
 
@@ -696,7 +737,7 @@ object StreamingQueries {
       |  ON p.user_id = c.user_id
       | AND c.ts >= p.ts - INTERVAL 10 MINUTE AND c.ts < p.ts
       |ORDER BY purchase_id, click_id""".stripMargin) { (spark, dir) =>
-    runStream(spark, "w14_stream_full_outer", w14Joined(spark, dir), OutputMode.Append())
+    drained(spark, "w14_stream_full_outer", w14Joined(spark, dir), OutputMode.Append())
       .orderBy("purchase_id", "click_id")
   }
 
@@ -762,7 +803,7 @@ object StreamingQueries {
       |       COUNT(*) AS n_events
       |FROM numbered GROUP BY user_id, sid
       |ORDER BY user_id, session_start""".stripMargin) { (spark, dir) =>
-    runStream(spark, "w15_stream_timeout_sessions", w15Sessions(spark, dir),
+    drained(spark, "w15_stream_timeout_sessions", w15Sessions(spark, dir),
       OutputMode.Append())
       .orderBy("user_id", "session_start")
   }
@@ -817,54 +858,24 @@ object StreamingQueries {
     val src = fastTmpDir("graft_w16_src")
     val ckpt = fastTmpDir("graft_ckpt_w16")
     w16LastCkpt = ckpt
-    val snapRoot = fastTmpDir("graft_w16_snap")
-    @volatile var current: Option[String] = None
-    def runPhase(): Unit = {
-      val q = EventsStream.tumblingCounts(EventsStream.read(spark, src))
-        .writeStream
-        .outputMode(OutputMode.Update())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val s = batch.sparkSession
-          val b = batch.select(col("window_start"), col("event_type"),
-            col("n"), col("sum_value"))
-          val merged = current match {
-            case None => b
-            case Some(prev) =>
-              s.read.parquet(prev)
-                .join(b.select("window_start", "event_type"),
-                  Seq("window_start", "event_type"), "left_anti")
-                .union(b)
-          }
-          val out = s"$snapRoot/v$batchId"
-          merged.write.mode("overwrite").parquet(out)
-          current = Some(out)
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val key = "spark.sql.shuffle.partitions"
-    val saved = spark.conf.get(key)
-    val target = sys.env.getOrElse("GRAFT_STREAM_PARTITIONS", "4").toInt
-    if (saved.toInt > target) spark.conf.set(key, target.toString)
-    try {
-      // half 1 arrives; the engine processes it and terminates
-      val t0 = System.currentTimeMillis()
-      Files.copy(stagedParts(0).toPath, Paths.get(src, stagedParts(0).getName),
-        StandardCopyOption.REPLACE_EXISTING)
-      new java.io.File(src, stagedParts(0).getName).setLastModified(t0)
-      runPhase()
-      // half 2 arrives while the engine is DOWN; a new query restarts
-      // from the same checkpoint and must resume, not reprocess
-      Files.copy(stagedParts(1).toPath, Paths.get(src, stagedParts(1).getName),
-        StandardCopyOption.REPLACE_EXISTING)
-      new java.io.File(src, stagedParts(1).getName).setLastModified(t0 + 60000L)
-      runPhase()
-    } finally spark.conf.set(key, saved)
-    spark.read.parquet(current.getOrElse(sys.error("w16: no micro-batch ran")))
-      .orderBy("window_start", "event_type")
+    val snaps = windowUpsert(fastTmpDir("graft_w16_snap"))
+    def runPhase(): Unit =
+      runStream(spark, "w16_stream_restart",
+        EventsStream.tumblingCounts(EventsStream.read(spark, src)),
+        OutputMode.Update(), snaps.sink, Some(ckpt))
+    // half 1 arrives; the engine processes it and terminates
+    val t0 = System.currentTimeMillis()
+    Files.copy(stagedParts(0).toPath, Paths.get(src, stagedParts(0).getName),
+      StandardCopyOption.REPLACE_EXISTING)
+    new java.io.File(src, stagedParts(0).getName).setLastModified(t0)
+    runPhase()
+    // half 2 arrives while the engine is DOWN; a new query restarts
+    // from the same checkpoint and must resume, not reprocess
+    Files.copy(stagedParts(1).toPath, Paths.get(src, stagedParts(1).getName),
+      StandardCopyOption.REPLACE_EXISTING)
+    new java.io.File(src, stagedParts(1).getName).setLastModified(t0 + 60000L)
+    runPhase()
+    snaps.latest(spark, "w16").orderBy("window_start", "event_type")
   }
 
   private val lateDirs =
@@ -934,42 +945,11 @@ object StreamingQueries {
       |       COUNT(*) AS n,
       |       CAST(SUM(CAST(value AS DECIMAL(14,2))) AS DOUBLE) AS sum_value
       |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin) { (spark, dir) =>
-    val src = eventsPathWithLate(spark, dir)
-    val ckpt = fastTmpDir("graft_ckpt_w17")
-    val snapRoot = fastTmpDir("graft_w17_snap")
-    @volatile var current: Option[String] = None
-    val key = "spark.sql.shuffle.partitions"
-    val saved = spark.conf.get(key)
-    val target = sys.env.getOrElse("GRAFT_STREAM_PARTITIONS", "4").toInt
-    if (saved.toInt > target) spark.conf.set(key, target.toString)
-    try {
-      val q = EventsStream.tumblingCounts(EventsStream.read(spark, src))
-        .writeStream
-        .outputMode(OutputMode.Update())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val s = batch.sparkSession
-          val b = batch.select(col("window_start"), col("event_type"),
-            col("n"), col("sum_value"))
-          val merged = current match {
-            case None => b
-            case Some(prev) =>
-              s.read.parquet(prev)
-                .join(b.select("window_start", "event_type"),
-                  Seq("window_start", "event_type"), "left_anti")
-                .union(b)
-          }
-          val out = s"$snapRoot/v$batchId"
-          merged.write.mode("overwrite").parquet(out)
-          current = Some(out)
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set(key, saved)
-    spark.read.parquet(current.getOrElse(sys.error("w17: no micro-batch ran")))
-      .orderBy("window_start", "event_type")
+    val snaps = windowUpsert(fastTmpDir("graft_w17_snap"))
+    runStream(spark, "w17_stream_late_drop",
+      EventsStream.tumblingCounts(EventsStream.read(spark, eventsPathWithLate(spark, dir))),
+      OutputMode.Update(), snaps.sink)
+    snaps.latest(spark, "w17").orderBy("window_start", "event_type")
   }
 
   /** CUSTOM-state crash recovery — w16 proves the windowed AGGREGATION
@@ -1040,32 +1020,18 @@ object StreamingQueries {
       val ev = EventsStream.read(spark, src).as[EventsStream.Event]
       val sessions = EventsStream.timeoutSessions(ev).toDF()
         .filter(col("user_id") >= 0)
-      val q = sessions.writeStream
-        .outputMode(OutputMode.Append())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(sink)
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      runStream(spark, "w18_stream_state_restart", sessions, OutputMode.Append(),
+        batchSink((batch, _) => batch.write.mode("append").parquet(sink)), Some(ckpt))
     }
-    val key = "spark.sql.shuffle.partitions"
-    val saved = spark.conf.get(key)
-    val target = sys.env.getOrElse("GRAFT_STREAM_PARTITIONS", "4").toInt
-    if (saved.toInt > target) spark.conf.set(key, target.toString)
-    try {
-      // half 1: every active session is OPEN in the state store when
-      // this run terminates
-      stage(dataParts(0), 0)
-      runPhase()
-      // half 2 + sentinels arrive while the engine is DOWN; the restart
-      // must resume the open sessions from the checkpointed state
-      stage(dataParts(1), 1)
-      sentinels.zipWithIndex.foreach { case (f, i) => stage(f, 2 + i) }
-      runPhase()
-    } finally spark.conf.set(key, saved)
+    // half 1: every active session is OPEN in the state store when
+    // this run terminates
+    stage(dataParts(0), 0)
+    runPhase()
+    // half 2 + sentinels arrive while the engine is DOWN; the restart
+    // must resume the open sessions from the checkpointed state
+    stage(dataParts(1), 1)
+    sentinels.zipWithIndex.foreach { case (f, i) => stage(f, 2 + i) }
+    runPhase()
     spark.read.parquet(sink)
       .select(col("user_id"), col("session_start"), col("session_end"),
         col("n_events"))
@@ -1126,7 +1092,7 @@ object StreamingQueries {
       |    WHERE c.user_id = p.user_id AND c.event_type = 'click'
       |      AND c.ts >= p.ts - INTERVAL 10 MINUTE AND c.ts < p.ts)
       |ORDER BY purchase_id""".stripMargin) { (spark, dir) =>
-    runStream(spark, "w19_stream_semi_join", w19Joined(spark, dir),
+    drained(spark, "w19_stream_semi_join", w19Joined(spark, dir),
         OutputMode.Append())
       .orderBy("purchase_id")
   }
@@ -1194,7 +1160,7 @@ object StreamingQueries {
       |SELECT h.window_start, h.event_type, h.n_buckets, h.n_events
       |FROM h, wm WHERE h.window_start + INTERVAL 1 HOUR <= wm.w
       |ORDER BY window_start, event_type""".stripMargin) { (spark, dir) =>
-    runStream(spark, "w20_stream_chained_agg", w20Chained(spark, dir),
+    drained(spark, "w20_stream_chained_agg", w20Chained(spark, dir),
         OutputMode.Append())
       .orderBy("window_start", "event_type")
   }
@@ -1247,7 +1213,7 @@ object StreamingQueries {
       |SELECT h.window_start, h.n_pairs, h.sum_value
       |FROM h, wm WHERE h.window_start + INTERVAL 1 HOUR <= wm.w
       |ORDER BY window_start""".stripMargin) { (spark, dir) =>
-    runStream(spark, "w21_stream_join_agg", w21Chained(spark, dir),
+    drained(spark, "w21_stream_join_agg", w21Chained(spark, dir),
         OutputMode.Append())
       .orderBy("window_start")
   }
@@ -1348,41 +1314,27 @@ object StreamingQueries {
     "w22_stream_incremental_dedup",
     "Streaming incremental LSH apply: new-doc stream probes the persisted band index in-plan; verdicts equal batch d13 row-for-row.",
     Dedup.d13IncrementalMinHash.oracle.get) { (spark, dir) =>
-    val stream = w22Stream(spark, dir)
-    val root = fastTmpDir("graft_w22_verdicts")
-    val written = scala.collection.mutable.ListBuffer.empty[String]
-    val q = stream.writeStream
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        // batch-local rollup: dedup the per-pair band multiplicity, then
-        // one aggregate per new doc — mirrors Dedup.d13's roll exactly
-        val pairs = b.filter(col("corpus_doc").isNotNull)
-          .select(col("new_doc"), col("corpus_doc"), col("j")).distinct()
-        val roll = pairs.groupBy(col("new_doc")).agg(
-          count(lit(1)).as("n_candidates"),
-          count(when(col("j") >= 0.7, lit(1))).as("n_dups"),
-          min(when(col("j") >= 0.7, col("corpus_doc"))).as("dup_of"))
-        val out = s"$root/b$batchId"
-        b.select(col("new_doc").as("doc_id")).distinct()
-          .join(roll, col("doc_id") === col("new_doc"), "left_outer")
-          .select(col("doc_id"),
-            coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
-            coalesce(col("n_dups"), lit(0L)).as("n_dups"),
-            col("dup_of"),
-            when(coalesce(col("n_dups"), lit(0L)) === 0, lit(1))
-              .otherwise(lit(0)).as("admit"))
-          .write.mode("overwrite").parquet(out)
-        written.synchronized { written += out; () }
-        ()
-      }
-      .option("checkpointLocation", fastTmpDir("graft_ckpt_w22"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    require(written.nonEmpty, "w22: no micro-batch ran")
-    // foreachBatch is at-least-once: a replayed batchId appends its path
-    // twice while the write itself is idempotent (mode overwrite) —
-    // distinct keeps the final read idempotent end-to-end
-    spark.read.parquet(written.toSeq.distinct: _*).orderBy("doc_id")
+    val verdicts = new BatchDirs(fastTmpDir("graft_w22_verdicts"), { b =>
+      // batch-local rollup: dedup the per-pair band multiplicity, then
+      // one aggregate per new doc — mirrors Dedup.d13's roll exactly
+      val pairs = b.filter(col("corpus_doc").isNotNull)
+        .select(col("new_doc"), col("corpus_doc"), col("j")).distinct()
+      val roll = pairs.groupBy(col("new_doc")).agg(
+        count(lit(1)).as("n_candidates"),
+        count(when(col("j") >= 0.7, lit(1))).as("n_dups"),
+        min(when(col("j") >= 0.7, col("corpus_doc"))).as("dup_of"))
+      b.select(col("new_doc").as("doc_id")).distinct()
+        .join(roll, col("doc_id") === col("new_doc"), "left_outer")
+        .select(col("doc_id"),
+          coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
+          coalesce(col("n_dups"), lit(0L)).as("n_dups"),
+          col("dup_of"),
+          when(coalesce(col("n_dups"), lit(0L)) === 0, lit(1))
+            .otherwise(lit(0)).as("admit"))
+    })
+    runStream(spark, "w22_stream_incremental_dedup", w22Stream(spark, dir),
+      OutputMode.Append(), verdicts.sink)
+    verdicts.all(spark, "w22").orderBy("doc_id")
   }
 
   /** w22's streaming frame, unexecuted — PlanSpec pins its shape (two
@@ -1471,62 +1423,51 @@ object StreamingQueries {
     "Streaming incremental ANN apply: new-vector stream probes the persisted IVF+SQ8 index in-plan; verdicts equal batch s21 row-for-row.",
     Similarity.s21IncrementalAnnApply.oracle.get) { (spark, dir) =>
     import org.apache.spark.sql.expressions.Window
-    val stream = w23Stream(spark, dir)
-    val root = fastTmpDir("graft_w23_verdicts")
-    val written = scala.collection.mutable.ListBuffer.empty[String]
-    val q = stream.writeStream
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        // batch-local shortlist → refine → rollup, mirroring batch s21
-        // stage-for-stage (Similarity.scala s21IncrementalAnnApply):
-        // prune to the top-K by the codegen'd integer dot FIRST, and
-        // only THEN join the persisted normed corpus and compute the
-        // exact cosine on the ≤K-per-probe shortlist — the 64-double
-        // vectors never cross the candidate fan
-        val cand = b.filter(col("neighbor_id").isNotNull)
-        val wr = Window.partitionBy(col("vec_id"))
-          .orderBy(col("dotq").desc, col("neighbor_id"))
-        val wc = Window.partitionBy(col("vec_id"))
-        val rk = cand
-          .withColumn("rnk", row_number().over(wr))
-          .withColumn("n_cand", count(lit(1)).over(wc))
-          .filter(col("rnk") <= Similarity.S21_K)
-        val nrm = Dedup.normedVectors(spark, dir)
-          .select(col("vec_id"), col("v"), col("nrm"))
-        val ref = rk
-          .join(nrm.select(col("vec_id").as("p_vid"), col("v").as("pv"),
-            col("nrm").as("pnrm")), col("vec_id") === col("p_vid"))
-          .join(nrm.select(col("vec_id").as("neighbor_id"),
-            col("v").as("nv"), col("nrm").as("nnrm")), "neighbor_id")
-          .select(col("vec_id"), col("neighbor_id"), col("n_cand"),
-            Dedup.cosineCol(col("pv"), col("nv"), col("pnrm"), col("nnrm"))
-              .as("cos"))
-        val wb = Window.partitionBy(col("vec_id"))
-          .orderBy(col("cos").desc, col("neighbor_id"))
-        val roll = ref.withColumn("brk", row_number().over(wb))
-          .groupBy(col("vec_id")).agg(
-            max(col("n_cand")).as("n_cand"),
-            max(when(col("brk") === 1, col("neighbor_id"))).as("nn_id"),
-            max(when(col("brk") === 1, col("cos"))).as("nn_cos"),
-            count(when(col("cos") >= Similarity.S21_DUP, lit(1))).as("n_dups"))
-        val out = s"$root/b$batchId"
-        b.select(col("vec_id"), col("cell"), col("bucket")).distinct()
-          .join(roll, Seq("vec_id"), "left_outer")
-          .select(col("vec_id"), col("cell"), col("bucket"),
-            coalesce(col("n_cand"), lit(0L)).as("n_cand"),
-            col("nn_id"), round(col("nn_cos"), 6).as("nn_cosine"),
-            coalesce(col("n_dups"), lit(0L)).as("n_dups"),
-            when(coalesce(col("n_dups"), lit(0L)) === 0, lit(1L))
-              .otherwise(lit(0L)).as("admit"))
-          .write.mode("overwrite").parquet(out)
-        written.synchronized { written += out; () }
-        ()
-      }
-      .option("checkpointLocation", fastTmpDir("graft_ckpt_w23"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    require(written.nonEmpty, "w23: no micro-batch ran")
-    spark.read.parquet(written.toSeq.distinct: _*).orderBy("vec_id")
+    val verdicts = new BatchDirs(fastTmpDir("graft_w23_verdicts"), { b =>
+      // batch-local shortlist → refine → rollup, mirroring batch s21
+      // stage-for-stage (Similarity.scala s21IncrementalAnnApply):
+      // prune to the top-K by the codegen'd integer dot FIRST, and
+      // only THEN join the persisted normed corpus and compute the
+      // exact cosine on the ≤K-per-probe shortlist — the 64-double
+      // vectors never cross the candidate fan
+      val cand = b.filter(col("neighbor_id").isNotNull)
+      val wr = Window.partitionBy(col("vec_id"))
+        .orderBy(col("dotq").desc, col("neighbor_id"))
+      val wc = Window.partitionBy(col("vec_id"))
+      val rk = cand
+        .withColumn("rnk", row_number().over(wr))
+        .withColumn("n_cand", count(lit(1)).over(wc))
+        .filter(col("rnk") <= Similarity.S21_K)
+      val nrm = Dedup.normedVectors(spark, dir)
+        .select(col("vec_id"), col("v"), col("nrm"))
+      val ref = rk
+        .join(nrm.select(col("vec_id").as("p_vid"), col("v").as("pv"),
+          col("nrm").as("pnrm")), col("vec_id") === col("p_vid"))
+        .join(nrm.select(col("vec_id").as("neighbor_id"),
+          col("v").as("nv"), col("nrm").as("nnrm")), "neighbor_id")
+        .select(col("vec_id"), col("neighbor_id"), col("n_cand"),
+          Dedup.cosineCol(col("pv"), col("nv"), col("pnrm"), col("nnrm"))
+            .as("cos"))
+      val wb = Window.partitionBy(col("vec_id"))
+        .orderBy(col("cos").desc, col("neighbor_id"))
+      val roll = ref.withColumn("brk", row_number().over(wb))
+        .groupBy(col("vec_id")).agg(
+          max(col("n_cand")).as("n_cand"),
+          max(when(col("brk") === 1, col("neighbor_id"))).as("nn_id"),
+          max(when(col("brk") === 1, col("cos"))).as("nn_cos"),
+          count(when(col("cos") >= Similarity.S21_DUP, lit(1))).as("n_dups"))
+      b.select(col("vec_id"), col("cell"), col("bucket")).distinct()
+        .join(roll, Seq("vec_id"), "left_outer")
+        .select(col("vec_id"), col("cell"), col("bucket"),
+          coalesce(col("n_cand"), lit(0L)).as("n_cand"),
+          col("nn_id"), round(col("nn_cos"), 6).as("nn_cosine"),
+          coalesce(col("n_dups"), lit(0L)).as("n_dups"),
+          when(coalesce(col("n_dups"), lit(0L)) === 0, lit(1L))
+            .otherwise(lit(0L)).as("admit"))
+    })
+    runStream(spark, "w23_stream_incremental_ann", w23Stream(spark, dir),
+      OutputMode.Append(), verdicts.sink)
+    verdicts.all(spark, "w23").orderBy("vec_id")
   }
 
   /** w23's streaming frame, unexecuted — PlanSpec pins its shape (three
@@ -1605,40 +1546,29 @@ object StreamingQueries {
     "w24_stream_incremental_edges",
     "Streaming incremental edge apply: new-edge stream probes the pinned standing adjacency in-plan; verdicts equal batch g11 row-for-row.",
     Graph.g11IncrementalEdges.oracle.get) { (spark, dir) =>
-    val stream = w24Stream(spark, dir)
-    val root = fastTmpDir("graft_w24_verdicts")
-    val written = scala.collection.mutable.ListBuffer.empty[String]
-    val q = stream.writeStream
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        // batch-local rollup: one aggregate per arriving edge — count the
-        // common-neighbor hits, carry the (constant-per-edge) degrees,
-        // then g11's verdict expressions verbatim
-        val roll = b.groupBy(col("x"), col("y")).agg(
-          count(col("hit")).as("cn"),
-          max(col("deg_x")).as("deg_x"),
-          max(col("deg_y")).as("deg_y"))
-        val cnC = coalesce(col("cn"), lit(0L))
-        val dxC = coalesce(col("deg_x"), lit(0L))
-        val dyC = coalesce(col("deg_y"), lit(0L))
-        val out = s"$root/b$batchId"
-        roll.select(col("x").as("supp_x"), col("y").as("supp_y"),
-            cnC.as("triangles_closed"), dxC.as("deg_x"), dyC.as("deg_y"),
-            when(dxC + dyC - cnC === 0, lit(0L))
-              .otherwise(expr(
-                "CAST((1000000 * coalesce(cn, 0L)) DIV (coalesce(deg_x, 0L) + coalesce(deg_y, 0L) - coalesce(cn, 0L)) AS BIGINT)"))
-              .as("jaccard_ppm"),
-            when(cnC >= Graph.LP_MIN_CN, lit(1L)).otherwise(lit(0L))
-              .as("predicted"))
-          .write.mode("overwrite").parquet(out)
-        written.synchronized { written += out; () }
-        ()
-      }
-      .option("checkpointLocation", fastTmpDir("graft_ckpt_w24"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    require(written.nonEmpty, "w24: no micro-batch ran")
-    spark.read.parquet(written.toSeq.distinct: _*).orderBy("supp_x", "supp_y")
+    val verdicts = new BatchDirs(fastTmpDir("graft_w24_verdicts"), { b =>
+      // batch-local rollup: one aggregate per arriving edge — count the
+      // common-neighbor hits, carry the (constant-per-edge) degrees,
+      // then g11's verdict expressions verbatim
+      val roll = b.groupBy(col("x"), col("y")).agg(
+        count(col("hit")).as("cn"),
+        max(col("deg_x")).as("deg_x"),
+        max(col("deg_y")).as("deg_y"))
+      val cnC = coalesce(col("cn"), lit(0L))
+      val dxC = coalesce(col("deg_x"), lit(0L))
+      val dyC = coalesce(col("deg_y"), lit(0L))
+      roll.select(col("x").as("supp_x"), col("y").as("supp_y"),
+          cnC.as("triangles_closed"), dxC.as("deg_x"), dyC.as("deg_y"),
+          when(dxC + dyC - cnC === 0, lit(0L))
+            .otherwise(expr(
+              "CAST((1000000 * coalesce(cn, 0L)) DIV (coalesce(deg_x, 0L) + coalesce(deg_y, 0L) - coalesce(cn, 0L)) AS BIGINT)"))
+            .as("jaccard_ppm"),
+          when(cnC >= Graph.LP_MIN_CN, lit(1L)).otherwise(lit(0L))
+            .as("predicted"))
+    })
+    runStream(spark, "w24_stream_incremental_edges", w24Stream(spark, dir),
+      OutputMode.Append(), verdicts.sink)
+    verdicts.all(spark, "w24").orderBy("supp_x", "supp_y")
   }
 
   /** w24's streaming frame, unexecuted — PlanSpec pins its shape (four
@@ -1690,41 +1620,30 @@ object StreamingQueries {
     "w25_stream_incremental_payloads",
     "Streaming incremental payload apply: new-payload stream signs against the standing SimHash center and probes the persisted band index in-plan; verdicts equal batch m16 row-for-row.",
     Multimodal.m16IncrementalPayloads.oracle.get) { (spark, dir) =>
-    val stream = w25Stream(spark, dir)
-    val root = fastTmpDir("graft_w25_verdicts")
-    val written = scala.collection.mutable.ListBuffer.empty[String]
-    val q = stream.writeStream
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        // batch-local rollup — mirrors m16's roll exactly over the
-        // GROUPED candidates (bands are disjoint by construction, so
-        // groups need no distinct; cnt-weighted sums reconstruct the
-        // candidate-level counts, see Multimodal.payloadSigGroups)
-        val roll = b.filter(col("cnt").isNotNull)
-          .groupBy(col("doc_id").as("rd")).agg(
-            sum(col("cnt")).as("n_candidates"),
-            sum(when(col("hamming") <= Multimodal.SIG_HAMMING_MAX,
-              col("cnt")).otherwise(lit(0L))).as("n_dups"),
-            min(when(col("hamming") <= Multimodal.SIG_HAMMING_MAX,
-              col("min_doc"))).as("dup_of"))
-        val out = s"$root/b$batchId"
-        b.select(col("doc_id"), col("sig")).distinct()
-          .join(roll, col("doc_id") === col("rd"), "left_outer")
-          .select(col("doc_id"), col("sig"),
-            coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
-            coalesce(col("n_dups"), lit(0L)).as("n_dups"),
-            col("dup_of"),
-            when(coalesce(col("n_dups"), lit(0L)) === 0, lit(1L))
-              .otherwise(lit(0L)).as("admit"))
-          .write.mode("overwrite").parquet(out)
-        written.synchronized { written += out; () }
-        ()
-      }
-      .option("checkpointLocation", fastTmpDir("graft_ckpt_w25"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    require(written.nonEmpty, "w25: no micro-batch ran")
-    spark.read.parquet(written.toSeq.distinct: _*).orderBy("doc_id")
+    val verdicts = new BatchDirs(fastTmpDir("graft_w25_verdicts"), { b =>
+      // batch-local rollup — mirrors m16's roll exactly over the
+      // GROUPED candidates (bands are disjoint by construction, so
+      // groups need no distinct; cnt-weighted sums reconstruct the
+      // candidate-level counts, see Multimodal.payloadSigGroups)
+      val roll = b.filter(col("cnt").isNotNull)
+        .groupBy(col("doc_id").as("rd")).agg(
+          sum(col("cnt")).as("n_candidates"),
+          sum(when(col("hamming") <= Multimodal.SIG_HAMMING_MAX,
+            col("cnt")).otherwise(lit(0L))).as("n_dups"),
+          min(when(col("hamming") <= Multimodal.SIG_HAMMING_MAX,
+            col("min_doc"))).as("dup_of"))
+      b.select(col("doc_id"), col("sig")).distinct()
+        .join(roll, col("doc_id") === col("rd"), "left_outer")
+        .select(col("doc_id"), col("sig"),
+          coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
+          coalesce(col("n_dups"), lit(0L)).as("n_dups"),
+          col("dup_of"),
+          when(coalesce(col("n_dups"), lit(0L)) === 0, lit(1L))
+            .otherwise(lit(0L)).as("admit"))
+    })
+    runStream(spark, "w25_stream_incremental_payloads", w25Stream(spark, dir),
+      OutputMode.Append(), verdicts.sink)
+    verdicts.all(spark, "w25").orderBy("doc_id")
   }
 
   /** w25's streaming frame, unexecuted — PlanSpec pins its shape (the
