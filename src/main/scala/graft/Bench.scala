@@ -1,10 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
-  /** One bench session — the exact config Verify uses (see the inline
-    * rationale on each knob). Rebuilt PER FAMILY CHUNK (round 11): the
-    * session-inflation class (m4 r8, dp19 r9, w23/s14 r10 — a query slow
-    * in the full run but fast solo, from storage-pool pressure of LIVE
+  /** One bench session — the HarnessConf recipe, as in Verify, plus a
+    * warm-up. Rebuilt PER FAMILY CHUNK (round 11): the session-inflation
+    * class (m4 r8, dp19 r9, w23/s14 r10 — a query slow in the full run
+    * but fast solo, from storage-pool pressure of LIVE
     * session-cached artifacts accumulated by earlier families) is killed
     * structurally by giving each query family a fresh session, so every
     * in-record number IS the solo-session number and no solo replay
@@ -15,69 +15,8 @@ object Bench {
     * own chunk — which is exactly what a solo run of that family pays,
     * so in-session and solo numbers agree by construction.
     */
-  private def buildSession(sfDir: String, cpus: String): SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    // see HarnessConf: dev-only RocksDB + soak zstd-shuffle switches
-    val spark = HarnessConf.extraConf.foldLeft(SparkSession.builder()
-      .master(s"local[$cpus]")
-      // default: one shuffle partition per core. At soak scales (sf100:
-      // billion-row shuffles) override so partitions fit in memory — the
-      // design rule is partitions sized to the target SF, and AQE
-      // coalescing folds the excess away on small queries.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is parquet TIMESTAMP(NANOS); see Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // keep AQE (coalescing, skew splits) but disable RUNTIME demotion
-      // of shuffle joins to broadcast: demotion cancels the in-flight map
-      // stage, cancelled tasks are not reliably interruptible, and the
-      // abandoned work degrades every later query (measured 5-10×,
-      // intermittent). Every small-dim join in the registry already
-      // broadcasts EXPLICITLY at plan time, so demotion had nothing left
-      // to win here.
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      // shuffle files + sort spills on tmpfs: the bench box is a shared
-      // VM whose disk stalls under co-tenant writeback throttling
-      // (observed: write/shuffle-heavy queries intermittently 5-10×
-      // while CPU calibration stays clean); RAM-backed local dirs take
-      // host disk out of the measurement. A real cluster points this at
-      // executor-local NVMe.
-      .config("spark.local.dir", {
-        val shm = ops.StreamingQueries.fastTmpDir("graft_local_bench")
-        // soak runs set SPARK_GRAFT_SCRATCH_DISK to a disk path: Spark
-        // round-robins blocks across the two roots, halving the RAM
-        // pressure of tmpfs-only scratch (the sf100 OOM class) the way
-        // executor-local NVMe would on a real cluster
-        sys.env.get("SPARK_GRAFT_SCRATCH_DISK") match {
-          case Some(d) =>
-            shm + "," + ops.StreamingQueries.scratchDirAt(d, "graft_local_bench")
-          case None => shm
-        }
-      })
-      // single-use localCheckpoint pins (d12 windows, t14
-      // bigrams…) become garbage the moment their query's count() ends,
-      // but ContextCleaner only reaps them after a DRIVER GC — and the
-      // default periodic GC (30 min) never fires inside one chunk. A 45s
-      // periodic GC keeps dead pins reaped at negligible cost (measured
-      // at sf10: m4 164.7s → 61.8s before chunking existed).
-      .config("spark.cleaner.periodicGC.interval", "45s")
-      ) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // when AQE cancels a superseded stage (runtime join replan), actually
-    // interrupt its tasks — otherwise an abandoned aggregate keeps burning
-    // cores as a zombie and every later query's time is noise.
-    // Thread-locality note: this local property covers jobs submitted from
-    // THIS thread only. The streaming (w*) queries' micro-batch jobs run on
-    // StreamExecution threads, which are covered independently —
-    // StreamExecution.runStream sets its own job group with
-    // interruptOnCancel=true (verified in spark-sql 4.1.2 bytecode:
-    // iconst_1 before the SparkContext.setJobGroup(String,String,Z) call in
-    // o.a.s.sql.execution.streaming.runtime.StreamExecution).
-    spark.sparkContext.setLocalProperty("spark.job.interruptOnCancel", "true")
+  private def buildSession(sfDir: String, cpus: Int): SparkSession = {
+    val spark = HarnessConf.session(cpus, "graft_local_bench")
     // warm up the executor pool + parquet reader so the chunk's first
     // measured query doesn't absorb session-start cost (codegen caches
     // are JVM-global, so later sessions warm in well under a second)
@@ -89,8 +28,8 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val sfDir = HarnessConf.sfDir
+    val cpus = HarnessConf.cpus
     var spark = buildSession(sfDir, cpus)
     // metric is wall-clock over .count() per the driver's BASELINE.md
     // definition; note count() lets Catalyst prune final projections of
@@ -109,14 +48,6 @@ object Bench {
     while (calI < 300000000L) { calAcc += calI * 31; calI += 1 }
     val calSingle =
       if (calAcc != 0L) (System.nanoTime() - calS0) / 1e9 else -1.0
-    // dev-only subset (comma-separated names); the driver never sets it,
-    // so its runs always measure the full registry
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // dev-only per-query trace on stderr (never set by the driver)
-    val trace = sys.env.get("SPARK_GRAFT_BENCH_TRACE").contains("1")
-    // dev-only escape hatch: one shared session, the pre-round-11 shape
-    val oneSession = sys.env.get("SPARK_GRAFT_BENCH_ONE_SESSION").contains("1")
     // per-query storage-pool sample, taken right AFTER the query's
     // count() returns: cached bytes actually resident (getRDDStorageInfo
     // filters to blocks with storage) plus the count of LIVE pinned RDDs
@@ -134,17 +65,18 @@ object Bench {
     // contiguously, so chunking preserves the historical execution order
     def family(name: String): String = name.takeWhile(!_.isDigit)
     val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => HarnessConf.benchOnly.forall(_.contains(name)) }
     val chunkFamilies = scala.collection.mutable.ListBuffer.empty[String]
     val triples = sorted.zipWithIndex.map { case ((name, fn), i) =>
       val f = family(name)
       if (chunkFamilies.lastOption.contains(f)) ()
       else {
         // chunk boundary: a fresh session per family (see buildSession)
-        if (i > 0 && !oneSession) { spark.stop(); spark = buildSession(sfDir, cpus) }
+        if (i > 0) { spark.stop(); spark = buildSession(sfDir, cpus) }
         chunkFamilies += f
       }
-      if (trace) System.err.println(s"[bench] ${System.currentTimeMillis()} start $name")
+      if (HarnessConf.benchTrace)
+        System.err.println(s"[bench] ${System.currentTimeMillis()} start $name")
       val t0 = System.nanoTime()
       // record failures explicitly: a thrown count() used to leave an
       // indistinguishable wall-clock number in the record (at sf100 a
@@ -152,7 +84,7 @@ object Bench {
       // failed queries now land in the record's "errors" list
       val ok = try { fn(spark, sfDir).count(); true }
                catch { case e: Throwable =>
-                 if (trace) System.err.println(
+                 if (HarnessConf.benchTrace) System.err.println(
                    s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
                  false }
       val sec = (System.nanoTime() - t0) / 1e9
@@ -187,13 +119,9 @@ object Bench {
     val calParEnd = (System.nanoTime() - calT1) / 1e9
     val (full, compact) = renderRecords(results, failed, storage,
       chunkFamilies.toSeq, calSingle, calPar, calParEnd, sfDir, warm)
-    // the full map to a bare file at an absolute path (sbt's cwd is the
-    // repo root; resolve explicitly so a different launcher cwd still
-    // lands it somewhere findable)
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      java.nio.file.Paths.get(sys.props("user.dir"), "bench_out.json").toString)
+    // the full map to a bare file (see HarnessConf.benchOut)
     try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(outPath), full + "\n")
+      java.nio.file.Paths.get(HarnessConf.benchOut), full + "\n")
     catch { case scala.util.control.NonFatal(_) => () }
     spark.stop()
     // stdout LAST, after spark.stop(), so no late WARN line splits it;

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,55 +8,17 @@ object Verify {
     // iteration; the driver always passes exactly two args = full dump)
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // see HarnessConf: dev-only RocksDB + soak zstd-shuffle switches
-    val spark = HarnessConf.extraConf.foldLeft(SparkSession.builder()
-      .master(s"local[$cpus]")
-      // see Bench: overridable at soak scales so partitions fit in memory
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts is parquet TIMESTAMP(NANOS); see Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // no runtime broadcast demotion (see Bench.scala) — cancelled map
-      // stages leave zombie tasks that slow every later dump
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      // shuffle/spill scratch on tmpfs (see Bench) — the dump itself
-      // still writes results wherever outDir points; soak dumps add a
-      // disk root (SPARK_GRAFT_SCRATCH_DISK, round-robined) so a heavy
-      // spill splits across RAM and disk like executor-local NVMe would
-      .config("spark.local.dir", {
-        val shm = ops.StreamingQueries.fastTmpDir("graft_local_verify")
-        sys.env.get("SPARK_GRAFT_SCRATCH_DISK") match {
-          case Some(d) =>
-            shm + "," + ops.StreamingQueries.scratchDirAt(d, "graft_local_verify")
-          case None => shm
-        }
-      })
-      // reap dead single-use localCheckpoint pins between queries (see
-      // Bench.scala — the full-dump session accumulates them the same way)
-      .config("spark.cleaner.periodicGC.interval", "45s")
-      ) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // interrupt tasks of AQE-cancelled stages (see Bench) — zombie tasks
-    // from one query would otherwise slow every later dump
-    spark.sparkContext.setLocalProperty("spark.job.interruptOnCancel", "true")
+    // the HarnessConf recipe; shuffle/spill scratch goes to tmpfs, the
+    // dump itself wherever outDir points
+    val spark = HarnessConf.session(HarnessConf.cpus, "graft_local_verify")
     new java.io.File(outDir).mkdirs()
-    // coalesce(1) keeps gate-scale dumps single-file for the driver's
-    // reader; soak dumps (sf100: multi-hundred-million-row results) set
-    // SPARK_GRAFT_NO_COALESCE=1 to write in parallel — compare_cached
-    // globs <dir>/*.parquet either way
-    val noCoalesce = sys.env.get("SPARK_GRAFT_NO_COALESCE").contains("1")
+    // coalesce(1): each query's dump is one parquet file
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-      try {
-        val df = fn(spark, sfDir)
-        (if (noCoalesce) df else df.coalesce(1)).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-      } catch { case e: Throwable =>
+      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name")
+      catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }

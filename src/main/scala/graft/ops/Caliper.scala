@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{Q, Tables}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** The reference's dataflow semantics (SURVEY.md §2/§3) re-expressed over

@@ -13,9 +13,12 @@ import org.apache.spark.sql.functions._
   */
 object EtlQueries {
 
-  private val repoRoot = sys.env.getOrElse("GRAFT_REPO_ROOT", "/root/repo")
-  private val itemsCsv = s"$repoRoot/src/test/resources/items.csv"
-  private val assessCsv = s"$repoRoot/src/test/resources/assessments.csv"
+  // the fixture CSVs, resolved against the working directory (sbt runs
+  // the mains and the test JVM from the repo root); only e1/e2 read them
+  private val fixtures =
+    java.nio.file.Paths.get(sys.props("user.dir"), "src", "test", "resources")
+  private val itemsCsv = s"$fixtures/items.csv"
+  private val assessCsv = s"$fixtures/assessments.csv"
 
   /** Item-level pipeline end-to-end (read → events → group-collect),
     * fixture-driven (sfDir unused — the operator under test is the CSV

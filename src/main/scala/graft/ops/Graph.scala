@@ -210,17 +210,17 @@ object Graph {
       dedges = de0.repartition(col(if (small) "b" else "a"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       def rounds(): DataFrame = {
-        // Round fusion (dev A/B knob; result is IDENTICAL at any value —
-        // same 10 logical rounds): F rounds build as one lazy DAG between
+        // Round fusion (result is IDENTICAL at any F — same 10 logical
+        // rounds): F rounds build as one lazy DAG between
         // localCheckpoint barriers, halving (at F=2) the materialization
         // jobs and convergence probes per run. Measured per the round-7
         // verdict item 3 (interleaved sf10 A/B): F=1 77.2/76.9s, F=2
         // 74.1/67.1s, F=5 75.8s, F=10 69.5s — fusion buys ~5-10% and
         // plateaus past F=2, i.e. the loop is SHUFFLE-dominated (the
-        // per-round edge aggregate), not barrier-dominated. Default F=2
-        // takes the win while keeping barrier convergence checks dense;
+        // per-round edge aggregate), not barrier-dominated. F=2 takes
+        // the win while keeping barrier convergence checks dense;
         // sf0.1 is a wash (barrier cost invisible under 16k nodes).
-        val fuse = math.max(1, sys.env.getOrElse("SPARK_GRAFT_G1_FUSE", "2").toInt)
+        val fuse = 2
         var rank = deg.select(col("node"), lit(SCALE).as("r"))
           .localCheckpoint()
         // Exact-fixpoint early exit at each BARRIER: the frames compared

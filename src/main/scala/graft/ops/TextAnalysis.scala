@@ -487,7 +487,6 @@ object TextAnalysis {
       |JOIN nrm nb ON d.doc_b = nb.doc_id
       |WHERE CAST(d.dp AS DOUBLE) / (sqrt(CAST(na.n2 AS DOUBLE)) * sqrt(CAST(nb.n2 AS DOUBLE))) >= 0.5
       |ORDER BY doc_a, doc_b""".stripMargin) { (spark, dir) =>
-    import org.apache.spark.sql.expressions.Window
     // non-distinct trigram stream (TF needs multiplicity, so this is the
     // raw 3-gram window, not the distinct-shingle kernel). The words
     // array MUST be materialized as its own column first: element_at on

@@ -1,0 +1,41 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Pins the one session recipe: `HarnessConf.sessionConf` is the conf map
+  * Bench and Verify each spelled out by hand before they shared it, and
+  * the shared test session is built on it.
+  */
+class HarnessConfSpec extends AnyFunSuite {
+
+  test("sessionConf(4, dir) is the Bench/Verify session conf") {
+    assume(HarnessConf.shufflePartitions.isEmpty && HarnessConf.extraConf.isEmpty,
+      "a soak knob is set in this environment")
+    assert(HarnessConf.sessionConf(4, "/scratch/local") === Map(
+      "spark.master" -> "local[4]",
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.ui.enabled" -> "false",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
+      "spark.local.dir" -> "/scratch/local",
+      "spark.cleaner.periodicGC.interval" -> "45s"))
+  }
+
+  test("a SPARK_GRAFT_SCRATCH_DISK root follows the tmpfs root in spark.local.dir") {
+    assert(HarnessConf.sessionConf(4, "/shm/a", Some("/disk/b"))("spark.local.dir") ===
+      "/shm/a,/disk/b")
+    assert(HarnessConf.sessionConf(4, "/shm/a", None)("spark.local.dir") === "/shm/a")
+  }
+
+  test("TestSpark.spark carries the recipe's confs") {
+    val spark = TestSpark.spark
+    val recipe = HarnessConf.sessionConf(4, "unused")
+    val sql = recipe.keys.filter(_.startsWith("spark.sql."))
+    assert(sql.size >= 4)
+    sql.foreach(k => assert(spark.conf.get(k) === recipe(k), k))
+    val ctx = spark.sparkContext.getConf
+    Seq("spark.master", "spark.ui.enabled", "spark.cleaner.periodicGC.interval")
+      .foreach(k => assert(ctx.get(k) === recipe(k), k))
+  }
+}

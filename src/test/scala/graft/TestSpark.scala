@@ -3,27 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test JVM (suites run in a
-  * single forked JVM; building a session per suite costs ~5s each).
+  * single forked JVM; building a session per suite costs ~5s each), on
+  * the Bench/Verify recipe at 4 cores.
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // no runtime broadcast demotion (see Bench.scala) — cancelled map
-      // stages leave zombie tasks that slow every later suite
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    // interrupt tasks of AQE-cancelled stages (see Bench.scala) — zombie
-    // tasks from one suite would otherwise slow every later one
-    s.sparkContext.setLocalProperty("spark.job.interruptOnCancel", "true")
-    s
-  }
+  lazy val spark: SparkSession = HarnessConf.session(4, "graft_local_test")
 
   val sf0001 = "/root/testdata/sf0.001"
 

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.HarnessConf
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -13,31 +14,12 @@ import org.apache.spark.sql.streaming.Trigger
   * micro-batch).
   *
   * Usage: GRAFT_PROBE_STREAM=w25 SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
-  *   sbt "Test/runMain graft.ProbeStream"
+  *   sbt "Test/runMain graft.ops.ProbeStream"
   */
 object ProbeStream {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.cleaner.periodicGC.interval", "45s")
-      .config("spark.local.dir", {
-        val shm = StreamingQueries.fastTmpDir("graft_local_probe")
-        sys.env.get("SPARK_GRAFT_SCRATCH_DISK") match {
-          case Some(d) =>
-            shm + "," + StreamingQueries.scratchDirAt(d, "graft_local_probe")
-          case None => shm
-        }
-      })
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = HarnessConf.session(HarnessConf.cpus, "graft_local_probe")
+    val sf = HarnessConf.sfDir
     val which = sys.env.getOrElse("GRAFT_PROBE_STREAM", "w25")
 
     def time[A](name: String)(f: => A): A = {
