@@ -92,16 +92,10 @@ object AssessmentEvents {
   }
 
   /** One JSON array of 3 events per input row, directory-per-attempt
-    * (`etl-assessment-level.js:114-116`).
+    * (`etl-assessment-level.js:114-116`), through the item pipeline's sink.
     */
   def writeJson(events: DataFrame, outDir: String): Unit =
-    events
-      .groupBy(col("attempt_id"))
-      // sorted for run-to-run determinism (collect_list order is not)
-      .agg(sort_array(collect_list(to_json(col("event")))).as("events"))
-      .select(col("attempt_id"),
-        concat(lit("["), concat_ws(",", col("events")), lit("]")).as("value"))
-      .write.mode("overwrite").partitionBy("attempt_id").text(outDir)
+    ItemEvents.writeJson(ItemEvents.groupedByAttempt(events), outDir)
 
   /** End-to-end with the optional rowsToExtract clamp
     * (`etl-assessment-level.js:14,42-43`; default: all rows).

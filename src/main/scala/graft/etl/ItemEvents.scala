@@ -90,13 +90,21 @@ object ItemEvents {
 
   /** One JSON array document per attempt, directory-per-key
     * (`etl.js:115-125`; SURVEY §7.5 treats directory-per-attempt as the
-    * sink contract — deterministic, unlike `Date.now()` filenames).
+    * sink contract — deterministic, unlike `Date.now()` filenames). The
+    * sink of both pipelines.
+    *
+    * A `file:` output goes through [[NioLocalFileSystem]]: with no
+    * `libhadoop`, the stock local FS forks a shell `chmod` for every file
+    * and directory it creates, which dominated the job. Each attempt
+    * directory therefore holds exactly one `part-*` document and no
+    * `.crc` sidecar. Other schemes (e.g. `hdfs:`, `s3a:`) use their own FS.
     */
   def writeJson(grouped: DataFrame, outDir: String): Unit =
     grouped
       .select(col("attempt_id"),
         concat(lit("["), concat_ws(",", col("events")), lit("]")).as("value"))
-      .write.mode("overwrite").partitionBy("attempt_id").text(outDir)
+      .write.options(NioLocalFileSystem.writeOptions)
+      .mode("overwrite").partitionBy("attempt_id").text(outDir)
 
   /** End-to-end: csv → events → grouped → partitioned JSON sink. */
   def run(spark: SparkSession, inPath: String, outDir: String): Unit =
