@@ -72,27 +72,18 @@ object Dedup {
     * 100 TB this materialization is the shingle index you'd write to
     * storage once and reuse across the dedup suite.
     */
-  private val shingleCache = new SessionCache[String, DataFrame](df => { df.unpersist(false); () })
+  private val shingleCache = new Pin.Shared[String, DataFrame]
 
   private[ops] def shingledDocs(spark: SparkSession, dir: String): DataFrame =
     // one persisted shingle frame per (session, dataset): d2 and d3 both
     // hit it (up to 5 references each), and recomputing the kernel per
     // query was the dedup family's biggest repeated cost. At 100 TB this
     // is the shingle index you'd materialize to storage once per corpus.
-    shingleCache.getOrElseUpdate(spark, dir) {
+    shingleCache(spark, dir) {
       GraftExpressions.register(spark)
-      val df = Tables.documents(spark, dir)
+      Tables.documents(spark, dir)
         .select(col("doc_id"), shingles(col("text"), 3).as("s"))
         .filter(size(col("s")) > 0)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // eager barrier: many consumers reference this frame from several
-      // join branches of ONE query; if the first query to touch it lets
-      // AQE materialize two branches concurrently, a runtime replan can
-      // cancel one mid-compute and the abandoned tasks burn cores as
-      // zombies (cancelled tasks are not interrupted). One cheap job
-      // materializes every block exactly once, before any race exists.
-      df.count()
-      df
     }
 
   /** Candidate pairs by prefix filtering (AllPairs/PPJoin): with a global
@@ -236,9 +227,9 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), round(j, 6).as("jaccard"))
   }
 
-  private val pairCache = new SessionCache[(String, Double), DataFrame](df => { df.unpersist(false); () })
+  private val pairCache = new SessionCache[(String, Double), DataFrame]()
 
-  private val prefixIdxCache = new SessionCache[(String, Double), DataFrame](df => { df.unpersist(false); () })
+  private val prefixIdxCache = new SessionCache[(String, Double), DataFrame]()
 
   /** The materialized prefix index, persisted once per (session, dataset,
     * threshold) and shared by d2 (self-join candidates) and d8 (prefix ×
@@ -348,7 +339,7 @@ object Dedup {
   /** MinHash size — exposed for the streaming apply (w22). */
   private[ops] def minhashK: Int = K
 
-  private val bandCache = new SessionCache[String, DataFrame](df => { df.unpersist(false); () })
+  private val bandCache = new Pin.Shared[String, DataFrame]
 
   /** Session-persisted LSH band index over the whole corpus:
     * `(doc_id, band, bh)` — one MinHash-signature pass ([[K]] hashes per
@@ -356,11 +347,10 @@ object Dedup {
     * references it twice and d13's incremental apply probes it per
     * batch; persisting it once per (session, dataset) is the
     * materialized LSH index a 100 TB corpus would keep on storage and
-    * refresh per ingest epoch. Eager count() barrier for the same
-    * AQE-zombie reason as [[shingledDocs]].
+    * refresh per ingest epoch. A [[Pin]], like [[shingledDocs]].
     */
   private[ops] def bandIndex(spark: SparkSession, dir: String): DataFrame =
-    bandCache.getOrElseUpdate(spark, dir) {
+    bandCache(spark, dir) {
       val sig = shingledDocs(spark, dir)
         .select(col("doc_id"), minhash(col("s"), K).as("sig"))
       // pinned pre-hash-partitioned and pre-sorted by the probe key
@@ -370,14 +360,11 @@ object Dedup {
       // stream-static probe (static plan re-executes EVERY micro-batch)
       // all skip the index-side Exchange + Sort (round 15, the w25 move).
       val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      val bands = sig
+      sig
         .select(col("doc_id"), bandCols(col("sig")).as("x"))
         .select(col("doc_id"), col("x.band").as("band"), col("x.bh").as("bh"))
         .repartition(p, col("band"), col("bh"))
         .sortWithinPartitions("band", "bh")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      bands.count()
-      bands
     }
 
   /** MinHash + LSH banding. Signature = one-pass Carter-Wegman kernel
@@ -480,17 +467,16 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
   }
 
-  private val simHashCache = new SessionCache[String, DataFrame](df => { df.unpersist(false); () })
+  private val simHashCache = new Pin.Shared[String, DataFrame]
 
   /** (doc_id, simhash) via the one-pass kernel — shared by d4 and specs;
     * persisted once per (session, dataset) like [[shingledDocs]].
     */
   def simHashes(spark: SparkSession, dir: String): DataFrame =
-    simHashCache.getOrElseUpdate(spark, dir) {
+    simHashCache(spark, dir) {
       GraftExpressions.register(spark)
       Tables.documents(spark, dir)
         .select(col("doc_id"), simhash(shingles(col("text"), 1), SIM_BITS).as("simhash"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   /** Number of blocks per side in the d5 blocked self-join grid: B² grid
@@ -583,20 +569,19 @@ object Dedup {
       .orderBy("vec_a", "vec_b")
   }
 
-  private val normedCache = new SessionCache[String, DataFrame](df => { df.unpersist(false); () })
+  private val normedCache = new Pin.Shared[String, DataFrame]
 
   /** embeddings as (vec_id, v: array<double>, nrm, label) — persisted once
     * per (session, dataset); referenced by d5, s1, s2 and s3 (up to twice
     * each per plan).
     */
   def normedVectors(spark: SparkSession, dir: String): DataFrame =
-    normedCache.getOrElseUpdate(spark, dir) {
+    normedCache(spark, dir) {
       GraftExpressions.register(spark)
       val v = col("embedding").cast("array<double>")
       Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("label"), v.as("v"))
         .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   /** Codegen'd left-fold cosine — identical op order to the DuckDB oracle. */
@@ -652,7 +637,7 @@ object Dedup {
        |lab AS (SELECT doc, MIN(root) AS cluster_id FROM reach GROUP BY doc),
        |sz AS (SELECT cluster_id, COUNT(*) AS cluster_size FROM lab GROUP BY cluster_id)""".stripMargin
 
-  private val clusterCache = new SessionCache[String, DataFrame](df => { df.unpersist(false); () })
+  private val clusterCache = new Pin.Shared[String, DataFrame]
 
   /** The cluster table (doc_id, cluster_id, cluster_size, is_canonical),
     * one row per clustered doc — computed once per (session, dataset) and
@@ -662,12 +647,7 @@ object Dedup {
     * storage once and every downstream consumer reads.
     */
   private[ops] def clusterTable(spark: SparkSession, dir: String): DataFrame =
-    clusterCache.getOrElseUpdate(spark, dir) {
-      val t = computeClusters(spark, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      t.count()
-      t
-    }
+    clusterCache(spark, dir)(computeClusters(spark, dir))
 
   val d6DedupClusters: Q = Q.sql(
     "d6_dedup_clusters",
@@ -682,10 +662,9 @@ object Dedup {
   private def computeClusters(spark: SparkSession, dir: String): DataFrame = {
     val pairs = jaccardPairs(spark, dir, 0.8)
       .select(col("doc_a"), col("doc_b"))
-    val edges = pairs
+    val edges0 = pairs
       .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
       .toDF("src", "dst")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // localCheckpoint each round: it truncates the LOGICAL plan too —
     // with plain persist the per-round tree deepens and Catalyst
     // re-optimizes the whole history (measured 2.3s → 26.6s at sf0.1).
@@ -694,13 +673,11 @@ object Dedup {
     // they are RDD-level blocks a Dataset.unpersist cannot free, and
     // reclaiming them via internal LogicalRDD surgery is not worth the
     // fragility at this size.
-    try Graph.withoutAqe(spark) {
+    Pin.during(edges0)(edges => Graph.withoutAqe(spark) {
       // AQE off for the fixpoint loop, same as g1/g2: ~3 micro-stages per
       // round over tiny known-size frames — per-stage re-planning was
       // measured at 3× the loop cost on g1 and d6 shows the same
       // intermittent multi-× inflation under AQE.
-      // (Inside the try: the eager checkpoint is already a Spark job, and
-      // a failure there must still unpersist edges.)
       var labels = edges.select(col("src").as("doc_id"))
         .distinct()
         .withColumn("label", col("doc_id"))
@@ -738,7 +715,7 @@ object Dedup {
         .join(broadcast(sz), "label")
         .select(col("doc_id"), col("label").as("cluster_id"), col("cluster_size"),
           (col("doc_id") === col("label")).as("is_canonical"))
-    } finally edges.unpersist()
+    })
   }
 
   /** Dedup APPLY — the step that turns d6's cluster table into the
@@ -1066,12 +1043,9 @@ object Dedup {
     val dups = e.filter(col("vec_id") % D10_DUP_EVERY === 0)
       .select((col("vec_id") + D10_DUP_OFFSET).as("vec_id"),
         transform(col("v"), (x, i0) => x * (lit(1.0) + eps(i0 + 1))).as("v"))
-    // persisted + eager barrier: referenced by the band build and both
-    // verify branches (see prefixIndexCached for the zombie-task rationale)
-    val aug = e.union(dups)
-      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    aug.count()
+    // pinned: referenced by the band build and both verify branches
+    val aug = Pin(e.union(dups)
+      .withColumn("nrm", sqrt(dot(col("v"), col("v")))))
     // all 144 sign bits in ONE projection (the 12 per-band 12-bit integer
     // keys), exploded to (vec_id, band, bkey) — narrow band rows, no
     // vector payload crosses the band shuffle

@@ -121,11 +121,6 @@ object EtlQueries {
       val out = StreamingQueries.fastTmpDir("graft_jsonl")
       graft.Tables.documents(spark, dir)
         .write.mode("overwrite").json(out)
-      // temp hygiene: deleteOnExit runs in reverse registration order and
-      // only removes empty dirs — dir first, files second
-      val root = new java.io.File(out)
-      root.deleteOnExit()
-      Option(root.listFiles()).getOrElse(Array.empty).foreach(_.deleteOnExit())
       out
     })
 
@@ -171,9 +166,6 @@ object EtlQueries {
       val out = StreamingQueries.fastTmpDir("graft_orc")
       graft.Tables.documents(spark, dir)
         .write.mode("overwrite").orc(out)
-      val root = new java.io.File(out)
-      root.deleteOnExit()
-      Option(root.listFiles()).getOrElse(Array.empty).foreach(_.deleteOnExit())
       out
     })
 
@@ -211,14 +203,6 @@ object EtlQueries {
       val out = StreamingQueries.fastTmpDir("graft_part")
       graft.Tables.documents(spark, dir)
         .write.mode("overwrite").partitionBy("lang").parquet(out)
-      val root = new java.io.File(out)
-      root.deleteOnExit()
-      // partitionBy nests one dir per lang value — register depth-first
-      // so deleteOnExit (reverse order, empty-dirs-only) can clear it
-      Option(root.listFiles()).getOrElse(Array.empty).foreach { d =>
-        d.deleteOnExit()
-        Option(d.listFiles()).getOrElse(Array.empty).foreach(_.deleteOnExit())
-      }
       out
     })
 
@@ -345,9 +329,6 @@ object EtlQueries {
         .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
           col("user_id"), col("event_type"), col("value"), col("props"))
         .write.mode("overwrite").option("header", "true").csv(out)
-      val root = new java.io.File(out)
-      root.deleteOnExit()
-      Option(root.listFiles()).getOrElse(Array.empty).foreach(_.deleteOnExit())
       out
     })
 
@@ -397,9 +378,6 @@ object EtlQueries {
       docs.filter(col("doc_id") % 2 === 1)
         .select(col("doc_id"), col("n_chars"))
         .write.mode("append").parquet(out)
-      val root = new java.io.File(out)
-      root.deleteOnExit()
-      Option(root.listFiles()).getOrElse(Array.empty).foreach(_.deleteOnExit())
       out
     })
 
@@ -450,9 +428,6 @@ object EtlQueries {
         .repartitionByRange(8, col("user_id"))
         .sortWithinPartitions(col("user_id"), col("ts"))
         .write.mode("overwrite").parquet(out)
-      val root = new java.io.File(out)
-      root.deleteOnExit()
-      Option(root.listFiles()).getOrElse(Array.empty).foreach(_.deleteOnExit())
       out
     })
 
@@ -518,11 +493,6 @@ object EtlQueries {
         .withColumn("bin", expr(s"doc_id div $r"))
         .repartition(col("bin"))
         .write.mode("overwrite").partitionBy("bin").parquet(out)
-      Seq(staged, out).foreach { d =>
-        val root = new java.io.File(d)
-        root.deleteOnExit()
-        Option(root.listFiles()).getOrElse(Array.empty).foreach(_.deleteOnExit())
-      }
       (out, r, stagedFiles)
     })
 
@@ -619,9 +589,6 @@ object EtlQueries {
         .repartition(col("zbin"))
         .sortWithinPartitions(col("z"))
         .write.mode("overwrite").partitionBy("zbin").parquet(out)
-      val root = new java.io.File(out)
-      root.deleteOnExit()
-      Option(root.listFiles()).getOrElse(Array.empty).foreach(_.deleteOnExit())
       (out, pw, sw, w)
     })
 
@@ -1007,20 +974,11 @@ object EtlQueries {
       val filesBefore = nFiles(staged) + nFiles(compact)
       // VACUUM: the fine files superseded by the rewrite (their coarse
       // bin is even) leave the filesystem for real
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(); ()
-      }
       val superseded = Option(new java.io.File(staged).listFiles())
         .getOrElse(Array.empty)
         .filter(f => f.isDirectory && f.getName.startsWith("fb="))
         .filter(f => (f.getName.stripPrefix("fb=").toLong / 4) % 2 == 0)
-      superseded.foreach(rm)
-      // temp hygiene: both roots came from fastTmpDir, which registers
-      // them with the RECURSIVE shutdown-hook cleanup (scratchRoots) —
-      // deleteOnExit would silently leak the non-empty parquet subtrees
-      // (it cannot remove non-empty dirs), so no per-file registration
-      // here on purpose
+      superseded.foreach(StreamingQueries.rm)
       (staged, compact, r, filesBefore, superseded.length.toLong)
     })
 

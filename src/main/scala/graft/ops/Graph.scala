@@ -42,7 +42,7 @@ object Graph {
     */
   private val BROADCAST_NODE_LIMIT = 50000000L
 
-  private val edgeCache = new SessionCache[String, DataFrame](df => { df.unpersist(false); () })
+  private val edgeCache = new Pin.Shared[String, DataFrame]
 
   /** Undirected co-purchase edges: customer c bought from supplier s in
     * some order. Node ids interleave the two key spaces (customer → 2k,
@@ -58,7 +58,9 @@ object Graph {
     * grows with the corpus.
     */
   private def copurchaseEdges(spark: SparkSession, dir: String): DataFrame =
-    edgeCache.getOrElseUpdate(spark, dir) {
+    // pinned: g3's pair mine self-joins this frame and g1/g2 start from
+    // it, so the family shares its one materialization job
+    edgeCache(spark, dir) {
       val eg = Tables.orders(spark, dir)
           .select(col("o_orderkey"), col("o_custkey"))
         .join(Tables.lineitem(spark, dir)
@@ -70,19 +72,11 @@ object Graph {
       // both directions via a map-side explode, NOT union(eg, eg.swap):
       // the union's second branch would recompute the whole
       // join+distinct subtree a second time during materialization
-      val df = eg
+      eg
         .select(explode(array(
           struct(col("a"), col("b")),
           struct(col("b").as("a"), col("a").as("b")))).as("e"))
         .select(col("e.a").as("a"), col("e.b").as("b"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // eager barrier: g3's pair mine self-joins this frame, and an
-      // unmaterialized persisted frame under AQE risks a cancelled
-      // duplicate materialization whose tasks keep running as zombies
-      // (see Dedup.prefixIndexCached); g1/g2 also start from it, so the
-      // one materialization job is shared by the whole family
-      df.count()
-      df
     }
 
   /** Runs `body` with AQE off, restoring the previous setting. The
@@ -134,6 +128,38 @@ object Graph {
       .select(col("b").as("node"), (col("dist") + 1).as("dist"))
       .groupBy(col("node")).agg(min(col("dist")).as("dist"))
 
+  /** Runs g1/g6's power iteration `body(deg, small, dedges)` over the
+    * co-purchase graph: `deg` is the checkpointed (node, deg) frame,
+    * `small` whether the node count allows the broadcast path, and
+    * `dedges` the edges enriched with the SENDER's degree, pinned for
+    * `body`. The contribution r div deg only ever needs deg(u) of the
+    * sending side, so carrying it on the edge removes the per-iteration
+    * deg re-join; deg (one row per node) broadcasts into the build. On
+    * the at-scale path the pin is pre-partitioned on the JOIN key (a) so
+    * the per-iteration shuffle join reuses this layout and only the rank
+    * frame moves (the Pregel invariant: edges stay put, messages move).
+    * On the broadcast path the join never shuffles, so the layout is
+    * spent where the shuffle actually is: partitioned on the AGGREGATE
+    * key (b), which the broadcast join preserves and the per-round
+    * destination aggregate consumes — every round's |E|-row contribution
+    * Exchange is gone (see [[contribSum]]). `body` must end on a
+    * checkpoint: the pin is released when it returns.
+    */
+  private def withSenderDegree[A](spark: SparkSession, dir: String)(
+      body: (DataFrame, Boolean, DataFrame) => A): A = {
+    val edges = copurchaseEdges(spark, dir)
+    val deg = edges.groupBy(col("a").as("node"))
+      .agg(count(lit(1)).as("deg"))
+      .localCheckpoint()
+    val small = deg.count() <= BROADCAST_NODE_LIMIT
+    val degSide = if (small) broadcast(deg) else deg
+    val de0 = edges
+      .join(degSide, edges("a") === deg("node"))
+      .select(col("a"), col("b"), col("deg").as("deg_a"))
+    Pin.during(de0.repartition(col(if (small) "b" else "a")))(
+      dedges => body(deg, small, dedges))
+  }
+
   /** PageRank with damping 0.85 over the undirected co-purchase graph,
     * run for a fixed [[ITERS]] power iterations in ×1e6 fixed point:
     *
@@ -182,33 +208,7 @@ object Graph {
          |FROM it$ITERS f JOIN deg d ON f.node = d.node
          |ORDER BY node_id""".stripMargin
     }) { (spark, dir) =>
-    val edges = copurchaseEdges(spark, dir)
-    var dedges: DataFrame = null
-    try {
-      val deg = edges.groupBy(col("a").as("node"))
-        .agg(count(lit(1)).as("deg"))
-        .localCheckpoint()
-      val nNodes = deg.count()
-      val small = nNodes <= BROADCAST_NODE_LIMIT
-      // enrich edges with the SENDER's degree once: the contribution
-      // r div deg only ever needs deg(u) of the sending side, so carrying
-      // it on the edge removes the per-iteration deg re-join (10 joins
-      // over the run); the receiver's degree is attached once at the end.
-      // deg (one row per node) broadcasts into the build. On the at-scale
-      // path the frame is pre-partitioned on the JOIN key (a) so the
-      // per-iteration shuffle join reuses this layout and only the rank
-      // frame moves (the Pregel invariant: edges stay put, messages
-      // move). On the broadcast path the join never shuffles, so the
-      // layout is spent where the shuffle actually is: partitioned on
-      // the AGGREGATE key (b), which the broadcast join preserves and
-      // the per-round destination aggregate consumes — every round's
-      // |E|-row contribution Exchange is gone (see [[contribSum]]).
-      val degSide = if (small) broadcast(deg) else deg
-      val de0 = edges
-        .join(degSide, edges("a") === deg("node"))
-        .select(col("a"), col("b"), col("deg").as("deg_a"))
-      dedges = de0.repartition(col(if (small) "b" else "a"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    withSenderDegree(spark, dir) { (deg, small, dedges) =>
       def rounds(): DataFrame = {
         // Round fusion (result is IDENTICAL at any F — same 10 logical
         // rounds): F rounds build as one lazy DAG between
@@ -263,7 +263,7 @@ object Graph {
           rank = next
         }
         // re-attach each node's own degree once, checkpointed so the
-        // returned plan survives the finally-unpersist below
+        // returned plan survives the pin's release
         rank
           .join(deg.withColumnRenamed("node", "dn"), col("node") === col("dn"))
           .select(col("node"), col("r"), col("deg"))
@@ -276,10 +276,6 @@ object Graph {
           expr("node div 2").as("entity_key"),
           col("deg"), col("r").as("rank_fp"))
         .orderBy("node_id")
-    } finally {
-      // safe pre-consumption: the loop ends on a localCheckpoint, so the
-      // returned plan reads the final checkpointed rank frame, not this
-      if (dedges != null) dedges.unpersist(false)
     }
   }
 
@@ -327,15 +323,13 @@ object Graph {
          |       dist AS hops
          |FROM it$HOPS ORDER BY node_id""".stripMargin
     }) { (spark, dir) =>
-    // loop-local edge copy persisted pre-hash-partitioned on the
+    // loop-local edge copy pinned pre-hash-partitioned on the
     // DESTINATION key: the per-round ~|E|-row relaxation aggregate
     // consumes the cached layout through the broadcast join and plans
     // with no Exchange (see [[relaxMin]]); only the 2·|V|-row
     // `dist ∪ relaxedMin` merge shuffles each round. min∘min == min,
     // so the two-level aggregate is row-identical to the single one.
-    val edges2 = copurchaseEdges(spark, dir).repartition(col("b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def rounds(): DataFrame = {
+    def rounds(edges2: DataFrame): DataFrame = {
       var dist = Tables.customer(spark, dir)
         .filter(col("c_nationkey") === 0)
         .select((col("c_custkey") * 2).as("node"), lit(0).as("dist"))
@@ -351,13 +345,13 @@ object Graph {
     // the frontier is bounded by |V| (16k at sf0.1, far under the
     // broadcast limit); a graph past BROADCAST_NODE_LIMIT would flip to
     // the g1 shuffle-hash shape with edges pre-partitioned on `a`
-    try withoutAqe(spark)(rounds())
+    Pin.during(copurchaseEdges(spark, dir).repartition(col("b")))(
+      edges2 => withoutAqe(spark)(rounds(edges2)))
       .select(col("node").as("node_id"),
         when(col("node") % 2 === 0, "customer").otherwise("supplier").as("entity"),
         expr("node div 2").as("entity_key"),
         col("dist").as("hops"))
       .orderBy("node_id")
-    finally edges2.unpersist(false)
   }
 
   private val AFFINITY_TOP = 5
@@ -479,7 +473,7 @@ object Graph {
       .select(expr("shiftright(pk, 32)").as("s1"),
         expr("pk & 4294967295").as("s2"), col("co"))
 
-  private val pairCache = new SessionCache[String, DataFrame](df => { df.unpersist(false); () })
+  private val pairCache = new Pin.Shared[String, DataFrame]
 
   /** Shared-customer counts per supplier pair (s1 < s2) — the pair-mine
     * aggregate both g3 (affinity top-k) and g4 (mutual-kNN triangles)
@@ -489,16 +483,11 @@ object Graph {
     * ascending, so s1 < s2 by construction — the r11 self-join on the
     * customer key is gone: it re-sorted the 550M-row incidence twice at
     * sf100 before emitting the same 11B pair rows). It is the expensive
-    * half of either query, so it is persisted once per (session,
-    * dataset) with an eager count barrier, like [[copurchaseEdges]].
+    * half of either query, so it is pinned once per (session, dataset),
+    * like [[copurchaseEdges]].
     */
   private def coPairs(spark: SparkSession, dir: String): DataFrame =
-    pairCache.getOrElseUpdate(spark, dir) {
-      val df = pairsFromArrays(cappedArrays(spark, dir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
-    }
+    pairCache(spark, dir)(pairsFromArrays(cappedArrays(spark, dir)))
 
   /** Link prediction / item-item affinity over the co-purchase graph:
     * for every supplier, its top-[[AFFINITY_TOP]] most-associated
@@ -892,22 +881,7 @@ object Graph {
          |WHERE f.r > 0
          |ORDER BY node_id""".stripMargin
     }) { (spark, dir) =>
-    val edges = copurchaseEdges(spark, dir)
-    var dedges: DataFrame = null
-    try {
-      val deg = edges.groupBy(col("a").as("node"))
-        .agg(count(lit(1)).as("deg"))
-        .localCheckpoint()
-      val nNodes = deg.count()
-      val small = nNodes <= BROADCAST_NODE_LIMIT
-      val degSide = if (small) broadcast(deg) else deg
-      val de0 = edges
-        .join(degSide, edges("a") === deg("node"))
-        .select(col("a"), col("b"), col("deg").as("deg_a"))
-      // layout spent on the per-round shuffle, like g1: aggregate key (b)
-      // on the broadcast path, join key (a) at scale — see [[contribSum]]
-      dedges = de0.repartition(col(if (small) "b" else "a"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    withSenderDegree(spark, dir) { (_, small, dedges) =>
       val seeds = Tables.customer(spark, dir)
         .filter(col("c_nationkey") === 0)
         .select((col("c_custkey") * 2).as("node"), lit(TELEPORT).as("t"))
@@ -936,8 +910,6 @@ object Graph {
           when(col("sn").isNull, 0L).otherwise(1L).as("is_seed"),
           col("r").as("rank_fp"))
         .orderBy("node_id")
-    } finally {
-      if (dedges != null) dedges.unpersist(false)
     }
   }
 

@@ -158,8 +158,7 @@ object Multimodal {
     out.result()
   }
 
-  private val assetsCache =
-    new SessionCache[String, Dataset[MediaAsset]](ds => { ds.unpersist(false); () })
+  private val assetsCache = new Pin.Shared[String, Dataset[MediaAsset]]
 
   /** documents → binary assets with typed metadata (the ingest edge: in
     * production `content` would come off object storage). Image payloads
@@ -171,12 +170,7 @@ object Multimodal {
     * this is the staged media table every consumer reads, written once.
     */
   def assets(spark: SparkSession, dir: String): Dataset[MediaAsset] =
-    assetsCache.getOrElseUpdate(spark, dir) {
-      val ds = assetsFrom(Tables.documents(spark, dir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      ds.count() // eager barrier (see prefixIndexCached in Dedup)
-      ds
-    }
+    assetsCache(spark, dir)(assetsFrom(Tables.documents(spark, dir)))
 
   /** Asset construction over an arbitrary (possibly pre-filtered)
     * documents frame. Filters that can be expressed on the source
@@ -627,8 +621,7 @@ object Multimodal {
     * [[SIG_HAMMING_MAX]]), then exact hamming verifies. The d4 SimHash
     * shape applied to binary payloads instead of token streams.
     */
-  private val payloadDotsCache =
-    new SessionCache[String, DataFrame](df => { df.unpersist(false); () })
+  private val payloadDotsCache = new Pin.Shared[String, DataFrame]
 
   /** Per-(doc, plane) SimHash projections over payload byte histograms —
     * m6's signature kernel, session-persisted and shared with m16's
@@ -642,7 +635,7 @@ object Multimodal {
     * payload-dedup pipeline materializes once per corpus snapshot.
     */
   private[ops] def payloadDots(spark: SparkSession, dir: String): DataFrame =
-    payloadDotsCache.getOrElseUpdate(spark, dir) {
+    payloadDotsCache(spark, dir) {
       graft.functions.GraftExpressions.register(spark)
       val c = Tables.documents(spark, dir)
         .filter(length(col("text")) > 0)
@@ -652,12 +645,9 @@ object Multimodal {
         .filter(col("cnt") > 0)
         .select(col("doc_id"), format_string("%02X", col("bidx")).as("byte"),
           col("cnt"))
-      val d = c.join(broadcast(planeWeights(spark)), col("byte") === col("wbyte"))
+      c.join(broadcast(planeWeights(spark)), col("byte") === col("wbyte"))
         .groupBy(col("doc_id"), col("p"))
         .agg(sum(col("cnt") * col("w")).as("dot"), sum(col("cnt")).as("n_doc"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      d.count()
-      d
     }
 
   /** The md5-derived SIG_PLANES×256 (plane, byte-hex, weight) table —
@@ -1429,8 +1419,7 @@ object Multimodal {
   private[ops] val M16_RES = 7
 
   private val sigCenterCache = new SessionCache[String, DataFrame]()
-  private val sigIdxCache =
-    new SessionCache[String, DataFrame](df => { df.unpersist(false); () })
+  private val sigIdxCache = new Pin.Shared[String, DataFrame]
 
   /** The STANDING SimHash center: per-plane projection sums over the
     * corpus only (batch residue EXCLUDED) — the quantizer statistic the
@@ -1453,17 +1442,13 @@ object Multimodal {
     * [[Similarity.annIndex]] for payload bytes).
     */
   private[ops] def payloadSigIndex(spark: SparkSession, dir: String): DataFrame =
-    sigIdxCache.getOrElseUpdate(spark, dir) {
-      val idx = signFrame(
+    sigIdxCache(spark, dir) {
+      signFrame(
         payloadDots(spark, dir).filter(col("doc_id") % M16_MOD =!= M16_RES),
         sigCenter(spark, dir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      idx.count()
-      idx
     }
 
-  private val sigGroupCache =
-    new SessionCache[String, DataFrame](df => { df.unpersist(false); () })
+  private val sigGroupCache = new Pin.Shared[String, DataFrame]
 
   /** [[payloadSigIndex]] collapsed to its distinct signature values:
     * `(sig_b, cnt, min_doc)` — at most 2^SIG_PLANES = 65536 rows
@@ -1482,17 +1467,14 @@ object Multimodal {
     * the whole static side fits one broadcast, so the stream-static /
     * batch probes carry no shuffle at all (guide §2.3 "shuffle keys and
     * metadata instead of payloads" / §8 "decide with small rows").
-    * Persisted + eager count() barrier as for [[payloadSigIndex]].
+    * A [[Pin]], like [[payloadSigIndex]].
     */
   private[ops] def payloadSigGroups(
       spark: SparkSession, dir: String): DataFrame =
-    sigGroupCache.getOrElseUpdate(spark, dir) {
-      val g = payloadSigIndex(spark, dir)
+    sigGroupCache(spark, dir) {
+      payloadSigIndex(spark, dir)
         .groupBy(col("sig").as("sig_b"))
         .agg(count(lit(1)).as("cnt"), min(col("doc_id")).as("min_doc"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      g.count()
-      g
     }
 
   private val signArtCache = new SessionCache[String, DataFrame]()

@@ -2,8 +2,13 @@ package graft.ops
 
 import org.apache.spark.sql.SparkSession
 
-/** Per-session memo for persisted frames shared across queries (shingle
-  * index, signatures, verified pairs…).
+/** Per-session memo for frames shared across queries. It holds two kinds:
+  *
+  *  - plain memos (`new SessionCache`): `localCheckpoint` frames and small
+  *    artifacts that are eager already and own no cache entry, so a
+  *    superseded value needs no release;
+  *  - pins, through [[Pin.Shared]], which builds each value with [[Pin]]
+  *    and passes [[Pin.release]] as `onReplace`.
   *
   * Lifecycle, honestly stated: sessions are WEAK keys and frames SOFT
   * values, which prevents the self-referential strong chain (a Dataset
@@ -13,7 +18,7 @@ import org.apache.spark.sql.SparkSession
   * those are tracked by the session's CacheManager until the session
   * ends, which is the intended lifetime for a materialized index in a
   * long-lived engine session. A cleared soft reference simply means the
-  * next request rebuilds (and re-persists) the frame; if the superseded
+  * next request rebuilds (and re-pins) the frame; if the superseded
   * frame is still reachable when that happens, `onReplace` releases its
   * storage blocks so rebuilds don't accumulate orphaned cached data
   * under exactly the memory pressure that cleared the reference.
@@ -38,7 +43,7 @@ private[ops] final class SessionCache[K, V <: AnyRef](
       case None =>
         // built outside any lock: concurrent distinct-key builds stay
         // parallel; a same-key race builds twice and last-write wins
-        // (both values are equivalent persisted frames)
+        // (both values are equivalent frames)
         val v = mk
         val old = inner.put(key, new java.lang.ref.SoftReference(v))
         // the soft ref may have been cleared but the frame itself still

@@ -2125,7 +2125,7 @@ object Similarity {
       "floor((x - lo[i]) / (hi[i] - lo[i]) * 255.0 + 0.5))) AS BIGINT) END)")
 
   private val sq8StatsCache = new SessionCache[String, DataFrame]()
-  private val annIdxCache = new SessionCache[String, DataFrame](df => { df.unpersist(false); () })
+  private val annIdxCache = new Pin.Shared[String, DataFrame]
 
   /** The standing SQ8 quantizer stats: per-dimension corpus min/max
     * (batch residue EXCLUDED — new vectors are encoded with stats that
@@ -2152,10 +2152,10 @@ object Similarity {
     * from the corpus-trained stats. At 100 TB this is the index an
     * embedding store persists and refreshes per epoch; s21's nightly
     * apply probes it without touching the corpus again ([[Dedup.bandIndex]]
-    * is the same shape for documents). Eager count() barrier as there.
+    * is the same shape for documents). A [[Pin]], as there.
     */
   private[ops] def annIndex(spark: SparkSession, dir: String): DataFrame =
-    annIdxCache.getOrElseUpdate(spark, dir) {
+    annIdxCache(spark, dir) {
       val e = Tables.embeddings(spark, dir)
         .filter(col("vec_id") % S21_MOD =!= S21_RES)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
@@ -2173,12 +2173,9 @@ object Similarity {
       // EVERY micro-batch), e18's ann stage — skips the index-side
       // Exchange + Sort (round 15, the w25 move).
       val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      val idx = cells.join(coded, "vec_id")
+      cells.join(coded, "vec_id")
         .repartition(p, col("cell"), col("bucket"))
         .sortWithinPartitions("cell", "bucket")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      idx.count()
-      idx
     }
 
   /** The trained codebook as ONE broadcastable row —

@@ -48,7 +48,8 @@ object StreamingQueries {
     ()
   }
 
-  private def rm(f: java.io.File): Unit = {
+  /** Recursive delete (a missing path is a no-op). */
+  private[ops] def rm(f: java.io.File): Unit = {
     Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
     f.delete(); ()
   }
@@ -313,10 +314,7 @@ object StreamingQueries {
           java.nio.file.Files.move(f(0).toPath,
             java.nio.file.Paths.get(out, s"$name.parquet"))
         }
-      val root = new java.io.File(out)
-      root.deleteOnExit()
-      val files = Option(root.listFiles()).getOrElse(Array.empty)
-      files.foreach(_.deleteOnExit())
+      val files = Option(new java.io.File(out).listFiles()).getOrElse(Array.empty)
       // deterministic micro-batch order (see scaladoc above)
       val t0 = System.currentTimeMillis()
       files.filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))

@@ -418,8 +418,7 @@ object TextAnalysis {
     * op. Shuffles: tf agg, df agg, term-keyed pair join, pair agg — all
     * equi-keyed with map-side partials.
     */
-  private val tfidfCache = new SessionCache[String, org.apache.spark.sql.DataFrame](
-    d => { d.unpersist(false); () })
+  private val tfidfCache = new Pin.Shared[String, org.apache.spark.sql.DataFrame]
 
   /** The per-doc top-5 distinctive-trigram index (doc_id, tk, w):
     * persisted once per (session, dataset) — the t11 plan references it
@@ -429,31 +428,28 @@ object TextAnalysis {
     * narrow rows, and the oracle computes the IDENTICAL key, so a
     * (cosmically unlikely) 60-bit collision merges the same two terms in
     * both engines — parity is unconditional. The tf frame is scratch
-    * (persisted during the build, released after).
+    * (pinned during the build, released after).
     */
   private def tfidfTopK(spark: org.apache.spark.sql.SparkSession, dir: String,
       trigrams: Column): org.apache.spark.sql.DataFrame =
-    tfidfCache.getOrElseUpdate(spark, dir) {
+    tfidfCache(spark, dir) {
       import org.apache.spark.sql.expressions.Window
       val tok = Tables.documents(spark, dir)
         .select(col("doc_id"), words.as("w"))
         .select(col("doc_id"), explode(trigrams).as("term"))
         .select(col("doc_id"), graft.functions.DetHash.md5Long60(col("term")).as("tk"))
-      val tf = tok.groupBy(col("doc_id"), col("tk")).agg(count(lit(1)).as("tf"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      tf.count() // df AND the weight join both read it — materialize once
-      val df = tf.groupBy(col("tk")).agg(count(lit(1)).as("df"))
-      val score = col("tf").cast("double") / col("df")
-      val w = Window.partitionBy(col("doc_id")).orderBy(score.desc, col("tk"))
-      val topk = tf.join(df, "tk")
-        .withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= 5)
-        .select(col("doc_id"), col("tk"),
-          floor(lit(1000000.0) * score).as("w"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      topk.count()
-      tf.unpersist(false)
-      topk
+      // df AND the weight join both read tf — pinned for the build only;
+      // the top-k frame is counted while tf is still pinned
+      Pin.during(tok.groupBy(col("doc_id"), col("tk")).agg(count(lit(1)).as("tf"))) { tf =>
+        val df = tf.groupBy(col("tk")).agg(count(lit(1)).as("df"))
+        val score = col("tf").cast("double") / col("df")
+        val w = Window.partitionBy(col("doc_id")).orderBy(score.desc, col("tk"))
+        Pin(tf.join(df, "tk")
+          .withColumn("rnk", row_number().over(w))
+          .filter(col("rnk") <= 5)
+          .select(col("doc_id"), col("tk"),
+            floor(lit(1000000.0) * score).as("w")))
+      }
     }
 
   val t11TfidfCosine: Q = Q.sql(
