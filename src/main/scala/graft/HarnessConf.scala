@@ -139,8 +139,8 @@ object HarnessConf {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     val spark = SparkSession.builder()
-      .config(sessionConf(cpus, ops.StreamingQueries.fastTmpDir(scratchTag),
-        scratchDisk.map(ops.StreamingQueries.scratchDirAt(_, scratchTag))))
+      .config(sessionConf(cpus, ops.Scratch.dir(scratchTag),
+        scratchDisk.map(ops.Scratch.dirAt(_, scratchTag))))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // when AQE cancels a superseded stage (runtime join replan), actually

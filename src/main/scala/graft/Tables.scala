@@ -37,10 +37,19 @@ object Tables {
     *    (NTZ when isAdjustedToUTC=false); cast to TimestampType so every
     *    downstream expression sees the identical type either way (the
     *    session timezone is pinned UTC, so the cast is value-preserving).
+    *
+    * [[eventsTs]] is that normalization on any events frame (the
+    * streaming source applies it too).
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(path(dir, "events"))
+    eventsTs(spark.read.parquet(path(dir, "events")))
+  }
+
+  /** `df` with `ts` as a µs TimestampType, whether it was read as a raw
+    * ns long or as a timestamp (see [[events]]).
+    */
+  def eventsTs(df: DataFrame): DataFrame =
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -48,7 +57,6 @@ object Tables {
         df.withColumn("ts",
           col("ts").cast(org.apache.spark.sql.types.TimestampType))
     }
-  }
 
   def region(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "nation")

@@ -113,16 +113,12 @@ object EtlQueries {
   }
 
   /** One staged JSONL copy of `documents` per (JVM, dataset). */
-  private val jsonlDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def jsonlPath(spark: org.apache.spark.sql.SparkSession, dir: String): String =
-    jsonlDirs.getOrElseUpdate(dir, {
-      val out = StreamingQueries.fastTmpDir("graft_jsonl")
+    Scratch.once("jsonl", dir) { out =>
       graft.Tables.documents(spark, dir)
         .write.mode("overwrite").json(out)
       out
-    })
+    }
 
   /** JSON-lines source parity — JSONL is the interchange format LLM
     * corpora actually ship in, so the engine's JSON write→read loop must
@@ -158,16 +154,12 @@ object EtlQueries {
       .orderBy("source")
   }
 
-  private val orcDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def orcPath(spark: org.apache.spark.sql.SparkSession, dir: String): String =
-    orcDirs.getOrElseUpdate(dir, {
-      val out = StreamingQueries.fastTmpDir("graft_orc")
+    Scratch.once("orc", dir) { out =>
       graft.Tables.documents(spark, dir)
         .write.mode("overwrite").orc(out)
       out
-    })
+    }
 
   /** ORC source parity — same contract as [[e3JsonlRoundtrip]] but
     * through the columnar ORC sink→source loop (type mapping, string
@@ -192,19 +184,15 @@ object EtlQueries {
       .orderBy("source")
   }
 
-  private val partDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** documents written once per (JVM, dataset) as a lang-partitioned
     * parquet table (`lang=en/part-*.parquet` hive layout).
     */
   private def partitionedPath(spark: org.apache.spark.sql.SparkSession, dir: String): String =
-    partDirs.getOrElseUpdate(dir, {
-      val out = StreamingQueries.fastTmpDir("graft_part")
+    Scratch.once("part", dir) { out =>
       graft.Tables.documents(spark, dir)
         .write.mode("overwrite").partitionBy("lang").parquet(out)
       out
-    })
+    }
 
   /** Partitioned-sink → partition-pruned-scan roundtrip: documents are
     * written `partitionBy("lang")` (the hive layout a 100 TB corpus
@@ -273,7 +261,7 @@ object EtlQueries {
           .select(col("l_orderkey"), col("l_extendedprice"))
           .repartition(BUCKETS, col("l_orderkey"))
           .write.bucketBy(BUCKETS, "l_orderkey").sortBy("l_orderkey")
-          .option("path", StreamingQueries.fastTmpDir("graft_bkt_li"))
+          .option("path", Scratch.dir("graft_bkt_li"))
           .mode("overwrite").saveAsTable(li)
       }
       if (!spark.catalog.tableExists(ord)) {
@@ -281,7 +269,7 @@ object EtlQueries {
           .select(col("o_orderkey"), col("o_orderstatus"))
           .repartition(BUCKETS, col("o_orderkey"))
           .write.bucketBy(BUCKETS, "o_orderkey").sortBy("o_orderkey")
-          .option("path", StreamingQueries.fastTmpDir("graft_bkt_ord"))
+          .option("path", Scratch.dir("graft_bkt_ord"))
           .mode("overwrite").saveAsTable(ord)
       }
       (li, ord)
@@ -320,17 +308,14 @@ object EtlQueries {
       .orderBy("o_orderstatus")
   }
 
-  private val csvDirs = scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def csvPath(spark: org.apache.spark.sql.SparkSession, dir: String): String =
-    csvDirs.getOrElseUpdate(dir, {
-      val out = StreamingQueries.fastTmpDir("graft_csv")
+    Scratch.once("csv", dir) { out =>
       graft.Tables.events(spark, dir)
         .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
           col("user_id"), col("event_type"), col("value"), col("props"))
         .write.mode("overwrite").option("header", "true").csv(out)
       out
-    })
+    }
 
   /** CSV sink→source parity — the reference's native format driven the
     * other way (the engine WRITES csv, then reads its own output through
@@ -362,15 +347,12 @@ object EtlQueries {
       .orderBy("event_type")
   }
 
-  private val evoDirs = scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Stage a schema-DRIFTED parquet directory: older files carry
     * (doc_id, lang), newer files add n_chars and drop lang — the shape a
     * long-lived corpus directory actually takes as its writer evolves.
     */
   private def evolvedPath(spark: org.apache.spark.sql.SparkSession, dir: String): String =
-    evoDirs.getOrElseUpdate(dir, {
-      val out = StreamingQueries.fastTmpDir("graft_evo")
+    Scratch.once("evo", dir) { out =>
       val docs = graft.Tables.documents(spark, dir)
       docs.filter(col("doc_id") % 2 === 0)
         .select(col("doc_id"), col("lang"))
@@ -379,7 +361,7 @@ object EtlQueries {
         .select(col("doc_id"), col("n_chars"))
         .write.mode("append").parquet(out)
       out
-    })
+    }
 
   /** Schema-evolution read: the drifted directory ([[evolvedPath]]) read
     * back with `mergeSchema=true`, so the scan presents the UNION schema
@@ -412,8 +394,6 @@ object EtlQueries {
       .orderBy("lang")
   }
 
-  private val sortedDirs = scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Stage events CLUSTERED on user_id: `repartitionByRange` gives each
     * file a disjoint user range and the within-partition sort makes every
     * row group's user_id min/max stats tight. That write-time layout is
@@ -422,14 +402,13 @@ object EtlQueries {
     * and filtering 100 TB.
     */
   private def sortedPath(spark: org.apache.spark.sql.SparkSession, dir: String): String =
-    sortedDirs.getOrElseUpdate(dir, {
-      val out = StreamingQueries.fastTmpDir("graft_sorted")
+    Scratch.once("sorted", dir) { out =>
       graft.Tables.events(spark, dir)
         .repartitionByRange(8, col("user_id"))
         .sortWithinPartitions(col("user_id"), col("ts"))
         .write.mode("overwrite").parquet(out)
       out
-    })
+    }
 
   /** Sort-clustered write → skipping read: the range predicate lands in
     * PushedFilters over the clustered copy ([[sortedPath]]), where the
@@ -460,9 +439,6 @@ object EtlQueries {
       .orderBy("event_type")
   }
 
-  private val compactDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (String, Long, Long)]
-
   /** Stage a deliberately fragmented copy of `documents` (one file per
     * fine-grained doc_id range), then COMPACT it: re-bin to 4× coarser
     * ranges, one file per output bin. Bin widths derive from the corpus
@@ -472,13 +448,13 @@ object EtlQueries {
     */
   private def compactedPath(spark: org.apache.spark.sql.SparkSession,
       dir: String): (String, Long, Long) =
-    compactDirs.getOrElseUpdate(dir, {
+    Scratch.once("compact", dir) { out =>
       val docs = graft.Tables.documents(spark, dir)
         .select(col("doc_id"), col("n_chars"), col("text"))
       val n = docs.count()
       val s = math.max(8L, n / 64L)
       val r = 4L * s
-      val staged = StreamingQueries.fastTmpDir("graft_frag")
+      val staged = Scratch.dir("graft_frag")
       // one file per fine bin: repartition ON the bin column puts each
       // bin in exactly one task, so partitionBy writes a single file
       // per directory (the same trick the e6 bucketed write uses)
@@ -487,14 +463,13 @@ object EtlQueries {
         .write.mode("overwrite").partitionBy("bin2").parquet(staged)
       val stagedFiles = spark.read.parquet(staged)
         .select(input_file_name()).distinct().count()
-      val out = StreamingQueries.fastTmpDir("graft_compact")
       spark.read.parquet(staged)
         .select(col("doc_id"), col("n_chars"), col("text"))
         .withColumn("bin", expr(s"doc_id div $r"))
         .repartition(col("bin"))
         .write.mode("overwrite").partitionBy("bin").parquet(out)
       (out, r, stagedFiles)
-    })
+    }
 
   /** Small-file compaction — the maintenance operator every 100 TB
     * corpus directory runs on a schedule (OPTIMIZE / rewrite-data-files
@@ -557,9 +532,6 @@ object EtlQueries {
       s"(((p16 >> $b) & 1) << ${2 * b})",
       s"(((s16 >> $b) & 1) << ${2 * b + 1})")).mkString(" + ")
 
-  private val zorderDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (String, Long, Long, Long)]
-
   /** Stage lineitem Z-ORDER-clustered on (l_partkey, l_suppkey): scale
     * both keys into [[Z_BITS]] bits by integer division (monotone
     * coarsening — locality survives any key range, unlike a modulus,
@@ -571,7 +543,7 @@ object EtlQueries {
     */
   private def zorderPath(spark: org.apache.spark.sql.SparkSession,
       dir: String): (String, Long, Long, Long) =
-    zorderDirs.getOrElseUpdate(dir, {
+    Scratch.once("zorder", dir) { out =>
       val li = graft.Tables.lineitem(spark, dir)
         .select(col("l_partkey"), col("l_suppkey"), col("l_extendedprice"))
       val Array(maxP, maxS) = li.agg(max("l_partkey"), max("l_suppkey"))
@@ -584,13 +556,12 @@ object EtlQueries {
         .withColumn("z", expr(zInterleaveSql))
       val maxZ = withZ.agg(max("z")).head.getLong(0)
       val w = maxZ / Z_BUCKETS + 1
-      val out = StreamingQueries.fastTmpDir("graft_zorder")
       withZ.withColumn("zbin", expr(s"z div $w"))
         .repartition(col("zbin"))
         .sortWithinPartitions(col("z"))
         .write.mode("overwrite").partitionBy("zbin").parquet(out)
       (out, pw, sw, w)
-    })
+    }
 
   /** Z-order clustering — the multi-dimensional layout operator behind
     * OPTIMIZE ZORDER / liquid clustering: interleaving the bits of TWO
@@ -937,9 +908,6 @@ object EtlQueries {
       .orderBy("tbl")
   }
 
-  private val vacuumDirs = scala.collection.concurrent.TrieMap
-    .empty[String, (String, String, Long, Long, Long)]
-
   /** Stage the e15 vacuum scenario: the documents corpus written as fine
     * range-binned files (e10's fragmentation model, width s), then a
     * REWRITE that compacts every EVEN coarse bin (width r = 4s) into one
@@ -952,17 +920,16 @@ object EtlQueries {
     */
   private def vacuumPath(spark: org.apache.spark.sql.SparkSession,
       dir: String): (String, String, Long, Long, Long) =
-    vacuumDirs.getOrElseUpdate(dir, {
+    Scratch.once("vac_fine", dir) { staged =>
       val docs = graft.Tables.documents(spark, dir)
         .select(col("doc_id"), col("n_chars"), col("text"))
       val n = docs.count()
       val s = math.max(8L, n / 64L)
       val r = 4L * s
-      val staged = StreamingQueries.fastTmpDir("graft_vac_fine")
       docs.withColumn("fb", expr(s"doc_id div $s"))
         .repartition(col("fb"))
         .write.mode("overwrite").partitionBy("fb").parquet(staged)
-      val compact = StreamingQueries.fastTmpDir("graft_vac_coarse")
+      val compact = Scratch.dir("graft_vac_coarse")
       spark.read.parquet(staged)
         .filter(expr(s"(doc_id div $r) % 2 = 0"))
         .select(col("doc_id"), col("n_chars"), col("text"))
@@ -978,9 +945,9 @@ object EtlQueries {
         .getOrElse(Array.empty)
         .filter(f => f.isDirectory && f.getName.startsWith("fb="))
         .filter(f => (f.getName.stripPrefix("fb=").toLong / 4) % 2 == 0)
-      superseded.foreach(StreamingQueries.rm)
+      superseded.foreach(Scratch.rm)
       (staged, compact, r, filesBefore, superseded.length.toLong)
-    })
+    }
 
   /** VACUUM / retention — the other half of the e10 maintenance pair:
     * after a compaction rewrite, the superseded data files must leave the
@@ -1050,8 +1017,6 @@ object EtlQueries {
       .orderBy("bin")
   }
 
-  private val dynPartDirs = scala.collection.concurrent.TrieMap.empty[String, String]
-
   private val E16_LANGS = Seq("de", "fr")
 
   /** Stage e16: full lang-partitioned write, then a DYNAMIC-mode
@@ -1061,8 +1026,7 @@ object EtlQueries {
     */
   private def dynPartPath(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    dynPartDirs.getOrElseUpdate(dir, {
-      val out = StreamingQueries.fastTmpDir("graft_dynpart")
+    Scratch.once("dynpart", dir) { out =>
       val docs = graft.Tables.documents(spark, dir)
         .select(col("doc_id"), col("n_chars"), col("source"), col("lang"))
       // one file per lang both times: hash-repartition on the partition
@@ -1078,7 +1042,7 @@ object EtlQueries {
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("lang").parquet(out)
       out
-    })
+    }
 
   /** Dynamic partition overwrite — the incremental-refresh primitive of
     * every partitioned 100 TB table (Spark's

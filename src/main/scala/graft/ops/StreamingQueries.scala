@@ -29,84 +29,6 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
   */
 object StreamingQueries {
 
-  /** Scratch dirs (checkpoints, staged inputs, drained sinks) go to
-    * tmpfs when the platform has one: the state store fsyncs one delta
-    * file per partition per operator per micro-batch, and on a disk-backed
-    * temp dir that fixed IO dominates the whole gate at bench scale. A
-    * production deployment points `checkpointLocation` at durable shared
-    * storage instead — this is gate/bench scratch, not the durability
-    * path.
-    */
-  private val scratchRoots =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[java.io.File]()
-
-  // deleteOnExit cannot remove non-empty dirs and the state store writes
-  // nested offsets/commits/state subtrees after dir creation — a recursive
-  // shutdown hook is the only way the tmpfs scratch actually gets freed.
-  private lazy val scratchCleanup: Unit = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => scratchRoots.forEach(rm)))
-    ()
-  }
-
-  /** Recursive delete (a missing path is a no-op). */
-  private[ops] def rm(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-    f.delete(); ()
-  }
-
-  /** Free one scratch dir now rather than at JVM exit. */
-  private def dropScratch(path: String): Unit = {
-    val f = new java.io.File(path)
-    rm(f)
-    scratchRoots.remove(f); ()
-  }
-
-  // tmpfs scratch competes with the JVM heap for physical RAM: guard on
-  // free space so a large staged copy degrades to disk tmp instead of
-  // failing with ENOSPC/OOM-kill mid-query. 4 GiB headroom covers the
-  // largest staged side-copy at the gate/bench scale with margin.
-  private val shmMinFreeBytes = 4L * 1024 * 1024 * 1024
-
-  // log the chosen scratch root class once per JVM — fastTmpDir's silent
-  // fallback to disk tmp changes what the bench measures across machines,
-  // so the run output must record which one this run actually used.
-  private val loggedRoots =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private[graft] def fastTmpDir(prefix: String): String = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val shmOk = java.nio.file.Files.isDirectory(shm) &&
-      java.nio.file.Files.isWritable(shm) &&
-      shm.toFile.getUsableSpace >= shmMinFreeBytes
-    val p =
-      if (shmOk) java.nio.file.Files.createTempDirectory(shm, prefix)
-      else java.nio.file.Files.createTempDirectory(prefix)
-    val rootClass = if (shmOk) "tmpfs:/dev/shm" else "disk:" + sys.props("java.io.tmpdir")
-    if (loggedRoots.add(rootClass))
-      System.err.println(s"[graft] scratch root: $rootClass " +
-        s"(usable ${p.getParent.toFile.getUsableSpace / (1024 * 1024)} MiB)")
-    scratchCleanup
-    scratchRoots.add(p.toFile)
-    p.toString
-  }
-
-  /** Scratch dir under an EXPLICIT root (registered for shutdown
-    * cleanup like [[fastTmpDir]]): used to add a disk root next to the
-    * tmpfs root in `spark.local.dir` — Spark round-robins shuffle/spill
-    * blocks across the listed dirs, so a RAM-backed-only scratch (which
-    * competes with the heap for physical RAM and OOM-killed the sf100
-    * soak at ~70 GB of spill) splits its pressure with the disk, the
-    * way executor-local NVMe would on a real cluster.
-    */
-  private[graft] def scratchDirAt(rootPath: String, prefix: String): String = {
-    val root = java.nio.file.Paths.get(rootPath)
-    java.nio.file.Files.createDirectories(root)
-    val p = java.nio.file.Files.createTempDirectory(root, prefix)
-    scratchCleanup
-    scratchRoots.add(p.toFile)
-    p.toString
-  }
-
   /** Checkpoint dirs of the last crash-recovery gate runs (w16/w18) —
     * exposed so the recovery pin in PlanSpec can assert the restarted
     * phase RESUMED the committed offsets log (contiguous batch ids from
@@ -140,7 +62,7 @@ object StreamingQueries {
     */
   private[graft] def runStream(spark: SparkSession, name: String, df: DataFrame,
       mode: OutputMode, sink: Sink, checkpoint: Option[String] = None): Unit = {
-    val ckpt = checkpoint.getOrElse(fastTmpDir(s"graft_ckpt_$name"))
+    val ckpt = checkpoint.getOrElse(Scratch.dir(s"graft_ckpt_$name"))
     val key = "spark.sql.shuffle.partitions"
     val saved = spark.conf.get(key)
     if (saved.toInt > HarnessConf.streamPartitions)
@@ -151,7 +73,7 @@ object StreamingQueries {
         .trigger(Trigger.AvailableNow()))
       .start().awaitTermination()
     finally spark.conf.set(key, saved)
-    if (checkpoint.isEmpty) dropScratch(ckpt)
+    if (checkpoint.isEmpty) Scratch.drop(ckpt)
   }
 
   /** [[runStream]] into a fresh scratch sink, read back as a DataFrame.
@@ -173,7 +95,7 @@ object StreamingQueries {
     require(mode == OutputMode.Append() || mode == OutputMode.Complete(),
       s"drained($name): unsupported output mode $mode — only " +
         "Append (file sink) and Complete (overwrite drain) are wired")
-    val out = fastTmpDir(s"graft_sink_$name")
+    val out = Scratch.dir(s"graft_sink_$name")
     runStream(spark, name, df, mode,
       if (mode == OutputMode.Append()) _.format("parquet").option("path", out)
       else batchSink((b, _) => b.write.mode("overwrite").parquet(out)))
@@ -245,24 +167,14 @@ object StreamingQueries {
     * stronger batch-equivalence claim than one batch of everything.
     * In-order arrival means no row is ever behind the 10-minute
     * watermark, so nothing is late-dropped and the drained sink still
-    * equals the batch oracle exactly. Batch ORDER must be forced via
-    * STRICTLY INCREASING modification times (part-0000k, which holds
-    * ascending ts range k, gets t0+k·60s): the file source breaks
-    * equal-modtime ties by local-FS readdir order, which follows
-    * creation order, i.e. task completion order — nondeterministic
-    * (observed once in a w15 run: the newer half scheduled first, its
-    * watermark ran ahead, and the older half's rows arrived late). Two
-    * batches, not more: each extra micro-batch re-pays the state-store
-    * file IO per partition per operator — one boundary crossing proves
-    * the property at half the gate cost of three.
+    * equals the batch oracle exactly ([[Scratch.Arrivals]] fixes the
+    * batch order). Two batches, not more: each extra micro-batch re-pays
+    * the state-store file IO per partition per operator — one boundary
+    * crossing proves the property at half the gate cost of three.
     */
-  private val stagedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def eventsPath(spark: SparkSession, dir: String): String =
-    stagedDirs.getOrElseUpdate(dir, {
+    Scratch.once("stream_events", dir) { out =>
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val out = fastTmpDir("graft_stream_events")
       // staged-file contract: ts is a raw LONG of epoch NANOS, whatever
       // the driver's parquet physical type (NANOS reads as a ns long via
       // nanosAsLong; MICROS reads as a timestamp → µs·1000). Everything
@@ -304,24 +216,21 @@ object StreamingQueries {
         .orderBy(abs(col("mid") - medianTs), col("mid"))
         .limit(1).collect().headOption.map(_.getLong(0))
         .getOrElse(medianTs)
-      Seq(("part-0", col("ts") <= boundary), ("part-1", col("ts") > boundary))
-        .foreach { case (name, cond) =>
-          val tmp = fastTmpDir(s"graft_stream_half_$name")
-          canon.filter(cond).repartition(1).write.mode("overwrite").parquet(tmp)
-          val f = Option(new java.io.File(tmp).listFiles()).getOrElse(Array.empty)
-            .filter(x => x.getName.startsWith("part-") && x.getName.endsWith(".parquet"))
-          require(f.length == 1, s"staging half $name: expected 1 file")
-          java.nio.file.Files.move(f(0).toPath,
-            java.nio.file.Paths.get(out, s"$name.parquet"))
-        }
-      val files = Option(new java.io.File(out).listFiles()).getOrElse(Array.empty)
-      // deterministic micro-batch order (see scaladoc above)
-      val t0 = System.currentTimeMillis()
-      files.filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .sortBy(_.getName).zipWithIndex
-        .foreach { case (f, i) => f.setLastModified(t0 + i * 60000L) }
-      out
-    })
+      stageTwoHalves(out, canon, "ts", boundary)
+    }
+
+  /** Stage `batch` in `out` as two arrivals: `part-0.parquet` holds the
+    * rows with `key <= boundary`, `part-1.parquet` the rest. Each ROW
+    * lives in exactly one staged file, which is what makes the w22–w25
+    * foreachBatch rollups batch-locally sound.
+    */
+  private def stageTwoHalves(out: String, batch: DataFrame, key: String,
+      boundary: Long): String = {
+    val arrivals = new Scratch.Arrivals(out)
+    arrivals.add("part-0.parquet", batch.filter(col(key) <= boundary))
+    arrivals.add("part-1.parquet", batch.filter(col(key) > boundary))
+    out
+  }
 
   /** Tumbling 1h windowed aggregation on the streaming engine, Complete
     * mode (watermark present but non-evicting) — every window emits, so
@@ -548,7 +457,7 @@ object StreamingQueries {
     def latestPerKey(df: DataFrame): DataFrame = df
       .withColumn("rn", row_number().over(latestW))
       .filter(col("rn") === 1).drop("rn")
-    val snaps = new Snapshots(fastTmpDir("graft_upsert_w11"), { (prev, batch) =>
+    val snaps = new Snapshots(Scratch.dir("graft_upsert_w11"), { (prev, batch) =>
       // collapse the batch to its per-key winners BEFORE touching
       // state — merge IO is then O(|keys in batch|)
       val winners = latestPerKey(batch)
@@ -577,26 +486,16 @@ object StreamingQueries {
     * because each side's watermark is tracked independently and the
     * global watermark is their MIN — one sentinel per filtered branch.
     */
-  private val sentinelDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def eventsPathWithSentinel(spark: SparkSession, dir: String): String =
-    sentinelDirs.getOrElseUpdate(dir, {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val out = fastTmpDir("graft_stream_events_sent")
+    Scratch.once("stream_events_sent", dir) { out =>
       // reuse the range-sorted staging the rest of the w-family already
       // paid for (copying two files beats re-sorting the table)
-      val staged = new java.io.File(eventsPath(spark, dir))
-      Option(staged.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .foreach { f =>
-          java.nio.file.Files.copy(f.toPath,
-            java.nio.file.Paths.get(out, f.getName))
-        }
+      val staged = eventsPath(spark, dir)
+      val arrivals = new Scratch.Arrivals(out)
+      Scratch.arrivals(staged).foreach(arrivals.add)
       // max ts off the STAGED copy — canonical raw ns longs whatever the
       // driver's parquet physical type (see eventsPath)
-      val ev = spark.read.parquet(staged.getPath)
-      val maxTs = ev.agg(max("ts")).head.getLong(0)
+      val maxTs = spark.read.parquet(staged).agg(max("ts")).head.getLong(0)
       import spark.implicits._
       // TWO sentinel files → two trailing micro-batches: the first
       // advances the watermark past every real row; the second EXISTS so
@@ -622,35 +521,15 @@ object StreamingQueries {
       // scan nor use to eliminate the outer join. Sentinels carry
       // user_id −1 so that coalesce identifies them on whichever side
       // survives null-extension.
-      val t = System.currentTimeMillis()
-      // deterministic batch order (see eventsPath): data files staggered
-      // by ts-range index FIRST, sentinels after — strictly increasing
-      // mod times, because equal-modtime ties fall back to readdir
-      // (creation) order, which is nondeterministic
-      val root = new java.io.File(out)
-      val dataFiles = Option(root.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .sortBy(_.getName)
-      dataFiles.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(t + i * 60000L)
-      }
       Seq(1, 2).foreach { k =>
         val sentTs = maxTs + k * 7200L * 1000000000L // +k·2h, ns
-        val sent = Seq(
+        arrivals.add(s"zz-sentinel-$k.parquet", Seq(
           (-(2L * k - 1), sentTs, -1L, "click", 0.0, "{}"),
           (-(2L * k), sentTs, -1L, "purchase", 0.0, "{}"))
-          .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        val tmp = fastTmpDir(s"graft_stream_sent_tmp$k")
-        sent.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-          .getOrElse(sys.error("w13: sentinel part file missing"))
-        val target = new java.io.File(out, s"zz-sentinel-$k.parquet")
-        java.nio.file.Files.move(part.toPath, target.toPath)
-        target.setLastModified(t + (dataFiles.length + k) * 60000L)
+          .toDF("event_id", "ts", "user_id", "event_type", "value", "props"))
       }
       out
-    })
+    }
 
   /** Stream-stream LEFT OUTER join: every purchase, with its preceding
     * clicks (<10 min) where they exist and a null-padded row where none
@@ -847,37 +726,25 @@ object StreamingQueries {
       |       COUNT(*) AS n,
       |       CAST(SUM(CAST(value AS DECIMAL(14,2))) AS DOUBLE) AS sum_value
       |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin) { (spark, dir) =>
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val stagedParts = new java.io.File(eventsPath(spark, dir))
-      .listFiles()
-      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      .sortBy(_.getName)
+    val stagedParts = Scratch.arrivals(eventsPath(spark, dir))
     require(stagedParts.length == 2, "w16 expects the 2-file ts-range staging")
-    val src = fastTmpDir("graft_w16_src")
-    val ckpt = fastTmpDir("graft_ckpt_w16")
+    val src = new Scratch.Arrivals(Scratch.dir("graft_w16_src"))
+    val ckpt = Scratch.dir("graft_ckpt_w16")
     w16LastCkpt = ckpt
-    val snaps = windowUpsert(fastTmpDir("graft_w16_snap"))
+    val snaps = windowUpsert(Scratch.dir("graft_w16_snap"))
     def runPhase(): Unit =
       runStream(spark, "w16_stream_restart",
-        EventsStream.tumblingCounts(EventsStream.read(spark, src)),
+        EventsStream.tumblingCounts(EventsStream.read(spark, src.dir)),
         OutputMode.Update(), snaps.sink, Some(ckpt))
     // half 1 arrives; the engine processes it and terminates
-    val t0 = System.currentTimeMillis()
-    Files.copy(stagedParts(0).toPath, Paths.get(src, stagedParts(0).getName),
-      StandardCopyOption.REPLACE_EXISTING)
-    new java.io.File(src, stagedParts(0).getName).setLastModified(t0)
+    src.add(stagedParts(0))
     runPhase()
     // half 2 arrives while the engine is DOWN; a new query restarts
     // from the same checkpoint and must resume, not reprocess
-    Files.copy(stagedParts(1).toPath, Paths.get(src, stagedParts(1).getName),
-      StandardCopyOption.REPLACE_EXISTING)
-    new java.io.File(src, stagedParts(1).getName).setLastModified(t0 + 60000L)
+    src.add(stagedParts(1))
     runPhase()
     snaps.latest(spark, "w16").orderBy("window_start", "event_type")
   }
-
-  private val lateDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
 
   /** The in-order staging plus ONE trailing file of genuinely LATE rows:
     * copies of the earliest hour's events under fresh ids (+1e10), same
@@ -887,20 +754,12 @@ object StreamingQueries {
     * silently weakening the gate.
     */
   private def eventsPathWithLate(spark: SparkSession, dir: String): String =
-    lateDirs.getOrElseUpdate(dir, {
-      val out = fastTmpDir("graft_stream_events_late")
-      val staged = new java.io.File(eventsPath(spark, dir))
-      val dataFiles = Option(staged.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .sortBy(_.getName)
-      val t0 = System.currentTimeMillis()
-      dataFiles.zipWithIndex.foreach { case (f, i) =>
-        val target = new java.io.File(out, f.getName)
-        java.nio.file.Files.copy(f.toPath, target.toPath)
-        target.setLastModified(t0 + i * 60000L)
-      }
+    Scratch.once("stream_events_late", dir) { out =>
+      val staged = eventsPath(spark, dir)
+      val arrivals = new Scratch.Arrivals(out)
+      Scratch.arrivals(staged).foreach(arrivals.add)
       // ts in the staged files is raw LONG nanos (nanosAsLong read)
-      val ev = spark.read.parquet(staged.getPath)
+      val ev = spark.read.parquet(staged)
       val b = ev.agg(min("ts").as("lo"), max("ts").as("hi")).head
       val (lo, hi) = (b.getLong(0), b.getLong(1))
       val hour = 3600L * 1000000000L
@@ -910,16 +769,9 @@ object StreamingQueries {
       val late = ev.filter(col("ts") < lo + hour)
         .withColumn("event_id", col("event_id") + 10000000000L)
       require(late.count() > 0, "w17 staging: no late rows")
-      val tmp = fastTmpDir("graft_stream_late_tmp")
-      late.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error("w17: late part file missing"))
-      val target = new java.io.File(out, "zz-late.parquet")
-      java.nio.file.Files.move(part.toPath, target.toPath)
-      target.setLastModified(t0 + dataFiles.length * 60000L)
+      arrivals.add("zz-late.parquet", late)
       out
-    })
+    }
 
   /** Watermark LATE-DATA DROP gate — the one watermark behavior the
     * in-order staging never exercises: rows arriving BEHIND the
@@ -943,7 +795,7 @@ object StreamingQueries {
       |       COUNT(*) AS n,
       |       CAST(SUM(CAST(value AS DECIMAL(14,2))) AS DOUBLE) AS sum_value
       |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin) { (spark, dir) =>
-    val snaps = windowUpsert(fastTmpDir("graft_w17_snap"))
+    val snaps = windowUpsert(Scratch.dir("graft_w17_snap"))
     runStream(spark, "w17_stream_late_drop",
       EventsStream.tumblingCounts(EventsStream.read(spark, eventsPathWithLate(spark, dir))),
       OutputMode.Update(), snaps.sink)
@@ -989,33 +841,23 @@ object StreamingQueries {
       |       COUNT(*) AS n_events
       |FROM numbered GROUP BY user_id, sid
       |ORDER BY user_id, session_start""".stripMargin) { (spark, dir) =>
-    import java.nio.file.{Files, Paths, StandardCopyOption}
     import spark.implicits._
     // the sentinel staging holds [part-0, part-1, zz-sentinel-1, zz-sentinel-2]
-    val staged = new java.io.File(eventsPathWithSentinel(spark, dir))
-    val allFiles = Option(staged.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    val dataParts = allFiles.filter(_.getName.startsWith("part-"))
-    val sentinels = allFiles.filter(_.getName.startsWith("zz-sentinel"))
+    val (dataParts, rest) = Scratch.arrivals(eventsPathWithSentinel(spark, dir))
+      .partition(_.getName.startsWith("part-"))
+    val sentinels = rest.filter(_.getName.startsWith("zz-sentinel"))
     require(dataParts.length == 2 && sentinels.length == 2,
       "w18 expects the 2-data + 2-sentinel staging")
     // non-vacuity: some session must SPAN the file boundary (open at the
     // stop, extended after the restart), or the state-recovery claim is
     // hollow
     run18SpanCheck(spark, dataParts)
-    val src = fastTmpDir("graft_w18_src")
-    val ckpt = fastTmpDir("graft_ckpt_w18")
+    val src = new Scratch.Arrivals(Scratch.dir("graft_w18_src"))
+    val ckpt = Scratch.dir("graft_ckpt_w18")
     w18LastCkpt = ckpt
-    val sink = fastTmpDir("graft_w18_sink")
-    val t0 = System.currentTimeMillis()
-    def stage(f: java.io.File, slot: Int): Unit = {
-      val target = new java.io.File(src, f.getName)
-      Files.copy(f.toPath, Paths.get(src, f.getName), StandardCopyOption.REPLACE_EXISTING)
-      target.setLastModified(t0 + slot * 60000L)
-      ()
-    }
+    val sink = Scratch.dir("graft_w18_sink")
     def runPhase(): Unit = {
-      val ev = EventsStream.read(spark, src).as[EventsStream.Event]
+      val ev = EventsStream.read(spark, src.dir).as[EventsStream.Event]
       val sessions = EventsStream.timeoutSessions(ev).toDF()
         .filter(col("user_id") >= 0)
       runStream(spark, "w18_stream_state_restart", sessions, OutputMode.Append(),
@@ -1023,12 +865,11 @@ object StreamingQueries {
     }
     // half 1: every active session is OPEN in the state store when
     // this run terminates
-    stage(dataParts(0), 0)
+    src.add(dataParts(0))
     runPhase()
     // half 2 + sentinels arrive while the engine is DOWN; the restart
     // must resume the open sessions from the checkpointed state
-    stage(dataParts(1), 1)
-    sentinels.zipWithIndex.foreach { case (f, i) => stage(f, 2 + i) }
+    (dataParts(1) +: sentinels).foreach(src.add)
     runPhase()
     spark.read.parquet(sink)
       .select(col("user_id"), col("session_start"), col("session_end"),
@@ -1043,7 +884,7 @@ object StreamingQueries {
     * only the state-carry proof is vacuous there, so log and continue.
     */
   private def run18SpanCheck(spark: SparkSession,
-      dataParts: Array[java.io.File]): Unit = {
+      dataParts: Seq[java.io.File]): Unit = {
     val gapNs = 30L * 60 * 1000000000L
     val ev0 = spark.read.parquet(dataParts(0).getPath)
     val last0 = ev0.groupBy("user_id").agg(max("ts").as("t0"))
@@ -1238,52 +1079,29 @@ object StreamingQueries {
         col("sum_value"))
   }
 
+  /** Stage `batch` once per (JVM, dataset) under `tag` as the two halves
+    * of [[stageTwoHalves]], split at the exact integer median of `key` —
+    * the staging all four incremental-apply streams (w22/w23/w24/w25)
+    * share. No session spans key boundaries here, so the
+    * sampled-exchange hazard of [[eventsPath]] doesn't apply and the
+    * median is safe.
+    */
+  private def medianHalves(tag: String, dir: String, key: String)(
+      batch: => DataFrame): String =
+    Scratch.once(tag, dir) { out =>
+      val b = batch
+      stageTwoHalves(out, b, key,
+        b.agg(expr(s"CAST(percentile($key, 0.5) AS BIGINT)")).head.getLong(0))
+    }
+
   /** Staged "new documents" stream — the d13 batch residue class
-    * (`doc_id % 20 = 7`) split into TWO doc_id-halved parquet files with
-    * forced ascending modtimes, so `maxFilesPerTrigger=1` +
-    * AvailableNow runs two REAL micro-batches (same determinism contract
-    * as [[eventsPath]]; the split point is the exact integer median —
-    * no session spans doc boundaries here, so the sampled-exchange
-    * hazard doesn't apply and the median is safe).
+    * (`doc_id % 20 = 7`) split into TWO doc_id-halved files.
     */
-  private val docsStagedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Stage a batch frame as TWO key-halved parquet files with forced
-    * ascending modtimes, so `maxFilesPerTrigger=1` + AvailableNow runs
-    * two REAL deterministic micro-batches — the staging contract all
-    * four incremental-apply streams (w22/w23/w24/w25) share. The split
-    * point is the exact integer median of the key; each ROW lives in
-    * exactly one staged file, which is what makes the foreachBatch
-    * rollups batch-locally sound.
-    */
-  private def stageTwoHalves(prefix: String, batch: DataFrame, key: String): String = {
-    val out = fastTmpDir(prefix)
-    val med = batch
-      .agg(expr(s"CAST(percentile($key, 0.5) AS BIGINT)")).head.getLong(0)
-    Seq(("part-0", col(key) <= med), ("part-1", col(key) > med))
-      .foreach { case (name, cond) =>
-        val tmp = fastTmpDir(s"${prefix}_half_$name")
-        batch.filter(cond).repartition(1).write.mode("overwrite").parquet(tmp)
-        val f = Option(new java.io.File(tmp).listFiles()).getOrElse(Array.empty)
-          .filter(x => x.getName.startsWith("part-") && x.getName.endsWith(".parquet"))
-        require(f.length == 1, s"$prefix staging half $name: expected 1 file")
-        java.nio.file.Files.move(f(0).toPath,
-          java.nio.file.Paths.get(out, s"$name.parquet"))
-      }
-    val files = Option(new java.io.File(out).listFiles()).getOrElse(Array.empty)
-    val t0 = System.currentTimeMillis()
-    files.filter(f => f.getName.endsWith(".parquet")).sortBy(_.getName)
-      .zipWithIndex.foreach { case (f, i) => f.setLastModified(t0 + i * 60000L) }
-    out
-  }
-
   private[ops] def docsPath(spark: SparkSession, dir: String): String =
-    docsStagedDirs.getOrElseUpdate(dir,
-      stageTwoHalves("graft_stream_docs",
-        Tables.documents(spark, dir)
-          .filter(col("doc_id") % Dedup.D13_MOD === Dedup.D13_RES),
-        "doc_id"))
+    medianHalves("stream_docs", dir, "doc_id") {
+      Tables.documents(spark, dir)
+        .filter(col("doc_id") % Dedup.D13_MOD === Dedup.D13_RES)
+    }
 
   /** Streaming incremental LSH dedup — d13's nightly apply run as a
     * STREAM: new documents arrive as files, the streaming plan computes
@@ -1312,7 +1130,7 @@ object StreamingQueries {
     "w22_stream_incremental_dedup",
     "Streaming incremental LSH apply: new-doc stream probes the persisted band index in-plan; verdicts equal batch d13 row-for-row.",
     Dedup.d13IncrementalMinHash.oracle.get) { (spark, dir) =>
-    val verdicts = new BatchDirs(fastTmpDir("graft_w22_verdicts"), { b =>
+    val verdicts = new BatchDirs(Scratch.dir("graft_w22_verdicts"), { b =>
       // batch-local rollup: dedup the per-pair band multiplicity, then
       // one aggregate per new doc — mirrors Dedup.d13's roll exactly
       val pairs = b.filter(col("corpus_doc").isNotNull)
@@ -1372,19 +1190,14 @@ object StreamingQueries {
   }
 
   /** Staged "new vectors" stream — s21's batch residue class
-    * (`vec_id % 20 = 7`) split into TWO vec_id-halved parquet files with
-    * forced ascending modtimes (the [[docsPath]] determinism contract,
-    * lifted to embeddings).
+    * (`vec_id % 20 = 7`) split into TWO vec_id-halved files (the
+    * [[docsPath]] staging, lifted to embeddings).
     */
-  private val vecsStagedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def vecsPath(spark: SparkSession, dir: String): String =
-    vecsStagedDirs.getOrElseUpdate(dir,
-      stageTwoHalves("graft_stream_vecs",
-        Tables.embeddings(spark, dir)
-          .filter(col("vec_id") % Similarity.S21_MOD === Similarity.S21_RES),
-        "vec_id"))
+    medianHalves("stream_vecs", dir, "vec_id") {
+      Tables.embeddings(spark, dir)
+        .filter(col("vec_id") % Similarity.S21_MOD === Similarity.S21_RES)
+    }
 
   /** Streaming incremental ANN apply — s21's nightly vector apply run as
     * a STREAM: new embeddings arrive as files; the STREAMING PLAN carries
@@ -1421,7 +1234,7 @@ object StreamingQueries {
     "Streaming incremental ANN apply: new-vector stream probes the persisted IVF+SQ8 index in-plan; verdicts equal batch s21 row-for-row.",
     Similarity.s21IncrementalAnnApply.oracle.get) { (spark, dir) =>
     import org.apache.spark.sql.expressions.Window
-    val verdicts = new BatchDirs(fastTmpDir("graft_w23_verdicts"), { b =>
+    val verdicts = new BatchDirs(Scratch.dir("graft_w23_verdicts"), { b =>
       // batch-local shortlist → refine → rollup, mirroring batch s21
       // stage-for-stage (Similarity.scala s21IncrementalAnnApply):
       // prune to the top-K by the codegen'd integer dot FIRST, and
@@ -1509,16 +1322,12 @@ object StreamingQueries {
   }
 
   /** Staged "new edges" stream — g11's arriving-edge residue class split
-    * into two x-halved parquet files ([[stageTwoHalves]]). The batch
-    * frame is [[Graph.g11BatchEdges]] itself, so stream and batch apply
-    * to the identical edge set by construction.
+    * into two x-halved files ([[medianHalves]]). The batch frame is
+    * [[Graph.g11BatchEdges]] itself, so stream and batch apply to the
+    * identical edge set by construction.
     */
-  private val edgesStagedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def edgesPath(spark: SparkSession, dir: String): String =
-    edgesStagedDirs.getOrElseUpdate(dir,
-      stageTwoHalves("graft_stream_edges", Graph.g11BatchEdges(spark, dir), "x"))
+    medianHalves("stream_edges", dir, "x")(Graph.g11BatchEdges(spark, dir))
 
   /** Streaming incremental edge apply — g11's nightly graph maintenance
     * run as a STREAM, completing the streaming-incremental symmetry for
@@ -1544,7 +1353,7 @@ object StreamingQueries {
     "w24_stream_incremental_edges",
     "Streaming incremental edge apply: new-edge stream probes the pinned standing adjacency in-plan; verdicts equal batch g11 row-for-row.",
     Graph.g11IncrementalEdges.oracle.get) { (spark, dir) =>
-    val verdicts = new BatchDirs(fastTmpDir("graft_w24_verdicts"), { b =>
+    val verdicts = new BatchDirs(Scratch.dir("graft_w24_verdicts"), { b =>
       // batch-local rollup: one aggregate per arriving edge — count the
       // common-neighbor hits, carry the (constant-per-edge) degrees,
       // then g11's verdict expressions verbatim
@@ -1618,7 +1427,7 @@ object StreamingQueries {
     "w25_stream_incremental_payloads",
     "Streaming incremental payload apply: new-payload stream signs against the standing SimHash center and probes the persisted band index in-plan; verdicts equal batch m16 row-for-row.",
     Multimodal.m16IncrementalPayloads.oracle.get) { (spark, dir) =>
-    val verdicts = new BatchDirs(fastTmpDir("graft_w25_verdicts"), { b =>
+    val verdicts = new BatchDirs(Scratch.dir("graft_w25_verdicts"), { b =>
       // batch-local rollup — mirrors m16's roll exactly over the
       // GROUPED candidates (bands are disjoint by construction, so
       // groups need no distinct; cnt-weighted sums reconstruct the

@@ -46,17 +46,10 @@ object EventsStream {
     // TIMESTAMP(MICROS) — normalize both to TimestampType µs exactly like
     // graft.Tables.events
     val sch = spark.read.parquet(dir).schema
-    val df = spark.readStream
+    graft.Tables.eventsTs(spark.readStream
       .schema(sch)
       .option("maxFilesPerTrigger", 1)
-      .parquet(dir)
-    df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case _ =>
-        df.withColumn("ts",
-          col("ts").cast(org.apache.spark.sql.types.TimestampType))
-    }
+      .parquet(dir))
   }
 
   /** Tumbling 1h counts with a 10-minute watermark — late events beyond

@@ -65,7 +65,7 @@ object ProbeStream {
           b.write.format("noop").mode("overwrite").save(); ()
         }
         .option("checkpointLocation",
-          StreamingQueries.fastTmpDir("graft_ckpt_probe"))
+          Scratch.dir("graft_ckpt_probe"))
         .trigger(Trigger.AvailableNow())
         .start()
       qq.awaitTermination()
