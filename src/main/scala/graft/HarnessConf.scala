@@ -156,4 +156,13 @@ object HarnessConf {
     spark.sparkContext.setLocalProperty("spark.job.interruptOnCancel", "true")
     spark
   }
+
+  /** Runs `body` with the session conf `key` set to `value`, then puts
+    * the session's own setting back, also when `body` throws.
+    */
+  def withConf[A](spark: SparkSession, key: String, value: String)(body: => A): A = {
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }

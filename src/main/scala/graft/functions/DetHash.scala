@@ -16,6 +16,15 @@ import org.apache.spark.sql.functions._
   * `('0x' || substring(md5(x), 1, 15))::bigint` (verified).
   */
 object DetHash {
+  /** Driver-side md5 of a UTF-8 string as 32 lowercase hex digits, the
+    * same text as Spark's and DuckDB's `md5`. Plan-build-time weights
+    * (the LSH planes, the PQ codebooks, d10's sign planes) derive from it
+    * and are inlined into both the Spark plan and the oracle SQL.
+    */
+  def md5Hex(s: String): String =
+    java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
+
   /** 60-bit non-negative hash of a string column. */
   def md5Long60(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")

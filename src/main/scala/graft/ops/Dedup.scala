@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Q, Tables}
+import graft.functions.DetHash.md5Hex
 import graft.functions.GraftExpressions
 import graft.functions.GraftExpressions.{dot, minhash, shingles, simhash}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -665,26 +666,20 @@ object Dedup {
     val edges0 = pairs
       .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
       .toDF("src", "dst")
-    // localCheckpoint each round: it truncates the LOGICAL plan too —
-    // with plain persist the per-round tree deepens and Catalyst
-    // re-optimizes the whole history (measured 2.3s → 26.6s at sf0.1).
-    // The superseded rounds' checkpoint blocks (a few KB each — one row
-    // per clustered doc, ≤ ~10 rounds) are left to session cleanup:
-    // they are RDD-level blocks a Dataset.unpersist cannot free, and
-    // reclaiming them via internal LogicalRDD surgery is not worth the
-    // fragility at this size.
-    Pin.during(edges0)(edges => Graph.withoutAqe(spark) {
-      // AQE off for the fixpoint loop, same as g1/g2: ~3 micro-stages per
-      // round over tiny known-size frames — per-stage re-planning was
-      // measured at 3× the loop cost on g1 and d6 shows the same
-      // intermittent multi-× inflation under AQE.
-      var labels = edges.select(col("src").as("doc_id"))
-        .distinct()
+    // The loop runs through [[Rounds]] with AQE off: ~3 micro-stages per
+    // round over tiny known-size frames, where AQE showed the same
+    // intermittent multi-× inflation as on g1. Each round's checkpoint
+    // also truncates the logical plan (see [[Rounds]]). The superseded
+    // rounds' checkpoint blocks (a few KB each — one row per clustered
+    // doc, ≤ ~10 rounds) are left to session cleanup: they are RDD-level
+    // blocks a Dataset.unpersist cannot free.
+    val maxRounds = 64
+    val (last, used) = Pin.during(edges0) { edges =>
+      val own = edges.select(col("src").as("doc_id")).distinct()
         .withColumn("label", col("doc_id"))
-        .localCheckpoint()
-      var changed = 1L
-      var rounds = 0
-      while (changed > 0 && rounds < 64) {
+      Rounds.until(spark, own, maxRounds, aqe = false) { (prev, _) =>
+        // a round's output also carries old_label, for the convergence count
+        val labels = prev.select(col("doc_id"), col("label"))
         val nbrMin = edges
           .join(labels.as("nl"), edges("dst") === col("nl.doc_id"))
           .groupBy(edges("src").as("nid"))
@@ -694,28 +689,25 @@ object Dedup {
         val ptrMin = labels.as("x")
           .join(labels.as("y"), col("x.label") === col("y.doc_id"))
           .select(col("x.doc_id").as("pid"), col("y.label").as("ptr_min"))
-        val next = labels.as("l")
+        labels.as("l")
           .join(nbrMin, col("l.doc_id") === col("nid"), "left")
           .join(ptrMin, col("l.doc_id") === col("pid"), "left")
           .select(col("l.doc_id").as("doc_id"), col("l.label").as("old_label"),
             least(col("l.label"),
               coalesce(col("nbr_min"), col("l.label")),
               coalesce(col("ptr_min"), col("l.label"))).as("label"))
-          .localCheckpoint()
-        changed = next.filter(col("label") < col("old_label")).count()
-        labels = next.select(col("doc_id"), col("label"))
-        rounds += 1
-      }
-      // fail loudly rather than return split clusters: an unconverged exit
-      // would otherwise surface only as an opaque oracle hash mismatch
-      require(changed == 0,
-        s"label propagation did not converge in $rounds rounds")
-      val sz = labels.groupBy(col("label")).agg(count(lit(1)).as("cluster_size"))
-      labels
-        .join(broadcast(sz), "label")
-        .select(col("doc_id"), col("label").as("cluster_id"), col("cluster_size"),
-          (col("doc_id") === col("label")).as("is_canonical"))
-    })
+      }((_, next) => next.filter(col("label") < col("old_label")).count() == 0)
+    }
+    // fail loudly rather than return split clusters: an unconverged exit
+    // would otherwise surface only as an opaque oracle hash mismatch
+    require(used.isDefined,
+      s"label propagation did not converge in $maxRounds rounds")
+    val labels = last.select(col("doc_id"), col("label"))
+    val sz = labels.groupBy(col("label")).agg(count(lit(1)).as("cluster_size"))
+    labels
+      .join(broadcast(sz), "label")
+      .select(col("doc_id"), col("label").as("cluster_id"), col("cluster_size"),
+        (col("doc_id") === col("label")).as("is_canonical"))
   }
 
   /** Dedup APPLY — the step that turns d6's cluster table into the
@@ -922,10 +914,6 @@ object Dedup {
       .orderBy("vec_id")
   }
 
-  private def md5HexStr(s: String): String =
-    java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-
   private val D10_DIMS = 64
   private val D10_BAND_BITS = 12
   private val D10_BANDS = 12
@@ -937,7 +925,7 @@ object Dedup {
     * engines inline bit-identical literals.
     */
   private def d10Sign(p: Int, d: Int): Int =
-    if (java.lang.Long.parseLong(md5HexStr(s"d10p-$p-$d").substring(0, 8), 16) % 2 == 0) 1 else -1
+    if (java.lang.Long.parseLong(md5Hex(s"d10p-$p-$d").substring(0, 8), 16) % 2 == 0) 1 else -1
 
   private def d10PlaneCol(p: Int): Column =
     array((0 until D10_DIMS).map(d => lit(d10Sign(p, d).toDouble)): _*)

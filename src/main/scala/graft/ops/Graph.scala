@@ -23,10 +23,11 @@ import org.apache.spark.sql.functions._
   * aggregate. Past that limit the code switches to the co-partitioned
   * shuffle-hash shape (edges pre-partitioned on the expansion key, rank
   * shuffled to meet it) — the billion-node Pregel layout where neither
-  * side can broadcast. The small-side path also disables AQE for the
-  * loop's micro-stages: re-planning ~30 tiny stages cost 3× the loop
-  * itself at gate scale (measured 12.5s → 4.2s), while the at-scale path
-  * keeps AQE for its skew handling.
+  * side can broadcast.
+  *
+  * Every loop here runs through [[Rounds]] (checkpointed rounds). AQE is
+  * off for g2, g5, g7 and g8, and for g1 and g6 on the small-side path;
+  * g1 and g6's at-scale path keeps AQE for its skew handling.
   */
 object Graph {
 
@@ -78,18 +79,6 @@ object Graph {
           struct(col("b").as("a"), col("a").as("b")))).as("e"))
         .select(col("e.a").as("a"), col("e.b").as("b"))
     }
-
-  /** Runs `body` with AQE off, restoring the previous setting. The
-    * iterative loops schedule ~3 micro-stages per round over frames AQE
-    * cannot improve (sizes are known, skew is impossible for a broadcast
-    * probe), and per-stage re-planning was measured at 3× the loop cost.
-    */
-  private[ops] def withoutAqe[A](spark: SparkSession)(body: => A): A = {
-    val key = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try body finally spark.conf.set(key, prev)
-  }
 
   /** One power-iteration contribution aggregate (g1/g6's per-round body):
     * degree-enriched edges ⋈ the round's rank frame on the SENDER key,
@@ -209,67 +198,57 @@ object Graph {
          |ORDER BY node_id""".stripMargin
     }) { (spark, dir) =>
     withSenderDegree(spark, dir) { (deg, small, dedges) =>
-      def rounds(): DataFrame = {
-        // Round fusion (result is IDENTICAL at any F — same 10 logical
-        // rounds): F rounds build as one lazy DAG between
-        // localCheckpoint barriers, halving (at F=2) the materialization
-        // jobs and convergence probes per run. Measured per the round-7
-        // verdict item 3 (interleaved sf10 A/B): F=1 77.2/76.9s, F=2
-        // 74.1/67.1s, F=5 75.8s, F=10 69.5s — fusion buys ~5-10% and
-        // plateaus past F=2, i.e. the loop is SHUFFLE-dominated (the
-        // per-round edge aggregate), not barrier-dominated. F=2 takes
-        // the win while keeping barrier convergence checks dense;
-        // sf0.1 is a wash (barrier cost invisible under 16k nodes).
-        val fuse = 2
-        var rank = deg.select(col("node"), lit(SCALE).as("r"))
-          .localCheckpoint()
-        // Exact-fixpoint early exit at each BARRIER: the frames compared
-        // are F rounds apart, so equality means rank is a fixpoint of f^F
-        // (f = one power iteration); the exit only fires when the
-        // remaining round count is a multiple of F, where the final
-        // frame provably equals the current one — oracle-preserving by
-        // construction at any F, no epsilon to mirror in SQL. At F=1
-        // this is exactly the per-round check. A THRESHOLD exit cannot
-        // fire under this contract: the measured max |Δr| trajectory
-        // decays at exactly the damping factor (0.85×/round — 14.0M→
-        // 3.19M fp units over rounds 1→10 at sf0.1, same curve at
-        // sf0.001/0.01), so quantizing to ±1 fp unit needs ~90 rounds;
-        // any epsilon loose enough to fire inside 10 rounds would just
-        // be a smaller ITERS wearing a convergence costume. The check
-        // itself is one broadcast join + isEmpty over two checkpointed
-        // node-frames (|V| rows, not |E|) — microseconds against the
-        // per-round edge aggregate.
-        var converged = false
-        var it = 0
-        while (it < ITERS && !converged) {
-          val steps = math.min(fuse, ITERS - it)
-          var cur = rank
-          for (_ <- 1 to steps) {
-            val rside = if (small) broadcast(cur) else cur.hint("shuffle_hash")
-            cur = contribSum(dedges, rside)
-              .select(col("node"),
-                (lit(TELEPORT) + expr("(85 * m) div 100")).as("r"))
-          }
-          // eager per-barrier checkpoints: lazy (single-DAG across ALL
-          // rounds) was measured equivalent at best and showed rare
-          // pathological outliers; the eager job per barrier is
-          // predictable and truncates lineage the same way
-          val next = cur.localCheckpoint()
-          it += steps
-          converged = (ITERS - it) % steps == 0 && next.as("n")
-            .join(broadcast(rank.as("p")), col("n.node") === col("p.node"))
-            .where(col("n.r") =!= col("p.r"))
-            .isEmpty
-          rank = next
-        }
-        // re-attach each node's own degree once, checkpointed so the
-        // returned plan survives the pin's release
-        rank
+      // Round fusion (result is IDENTICAL at any F — same 10 logical
+      // rounds): F rounds build as one lazy DAG between
+      // localCheckpoint barriers, halving (at F=2) the materialization
+      // jobs and convergence probes per run. Measured per the round-7
+      // verdict item 3 (interleaved sf10 A/B): F=1 77.2/76.9s, F=2
+      // 74.1/67.1s, F=5 75.8s, F=10 69.5s — fusion buys ~5-10% and
+      // plateaus past F=2, i.e. the loop is SHUFFLE-dominated (the
+      // per-round edge aggregate), not barrier-dominated. F=2 takes
+      // the win while keeping barrier convergence checks dense;
+      // sf0.1 is a wash (barrier cost invisible under 16k nodes).
+      // Eager per-barrier checkpoints: lazy (single-DAG across ALL
+      // rounds) was measured equivalent at best and showed rare
+      // pathological outliers.
+      val fuse = 2
+      require(ITERS % fuse == 0, s"$ITERS rounds do not split into barriers of $fuse")
+      def powerStep(cur: DataFrame): DataFrame = {
+        val rside = if (small) broadcast(cur) else cur.hint("shuffle_hash")
+        contribSum(dedges, rside)
+          .select(col("node"), (lit(TELEPORT) + expr("(85 * m) div 100")).as("r"))
+      }
+      // Exact-fixpoint early exit at each BARRIER: the frames compared
+      // are F rounds apart, so equality means rank is a fixpoint of f^F
+      // (f = one power iteration); with F dividing ITERS the final frame
+      // then provably equals the current one — oracle-preserving by
+      // construction, no epsilon to mirror in SQL. At F=1 this is
+      // exactly the per-round check. A THRESHOLD exit cannot
+      // fire under this contract: the measured max |Δr| trajectory
+      // decays at exactly the damping factor (0.85×/round — 14.0M→
+      // 3.19M fp units over rounds 1→10 at sf0.1, same curve at
+      // sf0.001/0.01), so quantizing to ±1 fp unit needs ~90 rounds;
+      // any epsilon loose enough to fire inside 10 rounds would just
+      // be a smaller ITERS wearing a convergence costume. The check
+      // itself is one broadcast join + isEmpty over two checkpointed
+      // node-frames (|V| rows, not |E|) — microseconds against the
+      // per-round edge aggregate.
+      val init = deg.select(col("node"), lit(SCALE).as("r"))
+      val (fixed, _) = Rounds.until(spark, init, ITERS / fuse, aqe = !small)(
+        (rank, _) => (1 to fuse).foldLeft(rank)((cur, _) => powerStep(cur))) { (prev, next) =>
+        next.as("n")
+          .join(broadcast(prev.as("p")), col("n.node") === col("p.node"))
+          .where(col("n.r") =!= col("p.r"))
+          .isEmpty
+      }
+      // re-attach each node's own degree once, checkpointed (with the
+      // loop's AQE setting) so the returned plan survives the pin's release
+      val rank = Rounds.scope(spark, aqe = !small) {
+        fixed
           .join(deg.withColumnRenamed("node", "dn"), col("node") === col("dn"))
           .select(col("node"), col("r"), col("deg"))
           .localCheckpoint()
       }
-      val rank = if (small) withoutAqe(spark)(rounds()) else rounds()
       rank
         .select(col("node").as("node_id"),
           when(col("node") % 2 === 0, "customer").otherwise("supplier").as("entity"),
@@ -329,24 +308,17 @@ object Graph {
     // with no Exchange (see [[relaxMin]]); only the 2·|V|-row
     // `dist ∪ relaxedMin` merge shuffles each round. min∘min == min,
     // so the two-level aggregate is row-identical to the single one.
-    def rounds(edges2: DataFrame): DataFrame = {
-      var dist = Tables.customer(spark, dir)
-        .filter(col("c_nationkey") === 0)
-        .select((col("c_custkey") * 2).as("node"), lit(0).as("dist"))
-        .localCheckpoint()
-      for (_ <- 1 to HOPS) {
-        dist = dist.union(relaxMin(edges2, dist))
-          .groupBy(col("node"))
-          .agg(min(col("dist")).as("dist"))
-          .localCheckpoint()
-      }
-      dist
-    }
+    val seeds = Tables.customer(spark, dir)
+      .filter(col("c_nationkey") === 0)
+      .select((col("c_custkey") * 2).as("node"), lit(0).as("dist"))
     // the frontier is bounded by |V| (16k at sf0.1, far under the
     // broadcast limit); a graph past BROADCAST_NODE_LIMIT would flip to
     // the g1 shuffle-hash shape with edges pre-partitioned on `a`
-    Pin.during(copurchaseEdges(spark, dir).repartition(col("b")))(
-      edges2 => withoutAqe(spark)(rounds(edges2)))
+    Pin.during(copurchaseEdges(spark, dir).repartition(col("b")))(edges2 =>
+      Rounds(spark, seeds, HOPS, aqe = false)((dist, _) =>
+        dist.union(relaxMin(edges2, dist))
+          .groupBy(col("node"))
+          .agg(min(col("dist")).as("dist"))))
       .select(col("node").as("node_id"),
         when(col("node") % 2 === 0, "customer").otherwise("supplier").as("entity"),
         expr("node div 2").as("entity_key"),
@@ -796,25 +768,19 @@ object Graph {
       .join(broadcast(alive.withColumnRenamed("node", "ax")), col("x") === col("ax"))
       .join(broadcast(alive.withColumnRenamed("node", "ay")), col("y") === col("ay"))
       .select(col("x"), col("y"))
-    def rounds(): DataFrame = {
-      var alive = mut
-        .select(explode(array(col("x"), col("y"))).as("node"))
-        .distinct().localCheckpoint()
-      for (_ <- 1 to CORE_ROUNDS) {
-        alive = induced(alive)
-          .select(explode(array(col("x"), col("y"))).as("node"))
-          .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-          .filter(col("deg") >= CORE_K)
-          .select(col("node"))
-          .localCheckpoint()
-      }
+    // tiny per-round frames: the rounds and the final degree count run
+    // with AQE off
+    val nodes = mut.select(explode(array(col("x"), col("y"))).as("node")).distinct()
+    val core = Rounds(spark, nodes, CORE_ROUNDS, aqe = false)((alive, _) =>
       induced(alive)
+        .select(explode(array(col("x"), col("y"))).as("node"))
+        .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+        .filter(col("deg") >= CORE_K)
+        .select(col("node")))
+    Rounds.scope(spark, aqe = false)(induced(core)
         .select(explode(array(col("x"), col("y"))).as("s"))
         .groupBy(col("s")).agg(count(lit(1)).as("core_deg"))
-        .localCheckpoint()
-    }
-    // tiny per-round frames — same AQE-off rationale as g1/g2
-    withoutAqe(spark)(rounds())
+        .localCheckpoint())
       .select(col("s").as("supp_key"), col("core_deg"))
       .orderBy("supp_key")
   }
@@ -886,21 +852,15 @@ object Graph {
         .filter(col("c_nationkey") === 0)
         .select((col("c_custkey") * 2).as("node"), lit(TELEPORT).as("t"))
         .localCheckpoint()
-      def rounds(): DataFrame = {
-        var rank = seeds.select(col("node"), lit(SCALE).as("r"))
-          .localCheckpoint()
-        for (_ <- 0 until PPR_ITERS) {
-          val rside = if (small) broadcast(rank) else rank.hint("shuffle_hash")
-          rank = contribSum(dedges, rside)
-            .join(broadcast(seeds), Seq("node"), "full_outer")
-            .select(col("node"),
-              (coalesce(col("t"), lit(0L))
-                + expr("(85 * coalesce(m, 0)) div 100")).as("r"))
-            .localCheckpoint()
-        }
-        rank
+      val init = seeds.select(col("node"), lit(SCALE).as("r"))
+      val rank = Rounds(spark, init, PPR_ITERS, aqe = !small) { (prev, _) =>
+        val rside = if (small) broadcast(prev) else prev.hint("shuffle_hash")
+        contribSum(dedges, rside)
+          .join(broadcast(seeds), Seq("node"), "full_outer")
+          .select(col("node"),
+            (coalesce(col("t"), lit(0L))
+              + expr("(85 * coalesce(m, 0)) div 100")).as("r"))
       }
-      val rank = if (small) withoutAqe(spark)(rounds()) else rounds()
       rank.filter(col("r") > 0)
         .join(broadcast(seeds.select(col("node").as("sn"))),
           col("node") === col("sn"), "left_outer")
@@ -923,9 +883,8 @@ object Graph {
     * oracles, which repeat the same CTE chain) share ONE propagation per
     * (session, dataset). Each round: bidirectional edges ⋈ broadcast
     * label frame → per-(node,label) count with map-side partials →
-    * plurality pick via a ≤deg(v) candidate window; localCheckpoint per
-    * round truncates lineage, AQE off for the micro-stage loop (g1's
-    * measured rationale).
+    * plurality pick via a ≤deg(v) candidate window; the rounds run
+    * through [[Rounds]] with AQE off.
     */
   private[ops] def lpaLabels(spark: SparkSession, dir: String): DataFrame =
     lpaCache.getOrElseUpdate(spark, dir) {
@@ -938,22 +897,15 @@ object Graph {
         .localCheckpoint()
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("dst")).orderBy(col("cnt").desc, col("label"))
-      def rounds(): DataFrame = {
-        var lab = ed.select(col("src").as("node")).distinct()
-          .select(col("node"), col("node").as("label"))
-          .localCheckpoint()
-        for (_ <- 1 to LPA_ROUNDS) {
-          lab = ed.join(broadcast(lab), col("src") === col("node"))
-            .groupBy(col("dst"), col("label"))
-            .agg(count(lit(1)).as("cnt"))
-            .withColumn("rnk", row_number().over(w))
-            .filter(col("rnk") === 1)
-            .select(col("dst").as("node"), col("label"))
-            .localCheckpoint()
-        }
-        lab
-      }
-      withoutAqe(spark)(rounds())
+      val own = ed.select(col("src").as("node")).distinct()
+        .select(col("node"), col("node").as("label"))
+      Rounds(spark, own, LPA_ROUNDS, aqe = false)((lab, _) =>
+        ed.join(broadcast(lab), col("src") === col("node"))
+          .groupBy(col("dst"), col("label"))
+          .agg(count(lit(1)).as("cnt"))
+          .withColumn("rnk", row_number().over(w))
+          .filter(col("rnk") === 1)
+          .select(col("dst").as("node"), col("label")))
     }
 
   /** Synchronous label propagation (community detection) over the
@@ -973,8 +925,7 @@ object Graph {
     * rationale as g1; past it, the same co-partitioned shuffle shape) →
     * per-(node, label) count aggregate with map-side partials → plurality
     * pick via a per-node window over ≤ deg(v) ≤ [[MUTUAL_TOP]] candidate
-    * rows. `localCheckpoint` truncates lineage per round; AQE is off for
-    * the micro-stage loop (g1's measured rationale). Degree ≤
+    * rows. The rounds run through [[Rounds]] with AQE off. Degree ≤
     * [[MUTUAL_TOP]] by construction bounds each round at O(K·|V|) rows —
     * community detection on the sparsified graph stays linear at 100 TB.
     */
@@ -1131,23 +1082,18 @@ object Graph {
       .withColumn("deg", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
       .localCheckpoint()
-    def walk(): DataFrame = {
-      var cur = adj.select(col("src")).distinct()
-        .select(col("src").as("start"), col("src").as("node"))
-        .localCheckpoint()
-      var acc = cur.withColumn("step", lit(0L))
-      for (t <- 1 to WALK_LEN) {
-        val pick = pmod(graft.functions.DetHash.md5Long28(
-          concat_ws("#", col("node"), lit(t), col("start"))), col("deg")) + 1
-        cur = cur.join(adj, col("node") === col("src"))
-          .filter(col("rnk") === pick)
-          .select(col("start"), col("dst").as("node"))
-          .localCheckpoint()
-        acc = acc.union(cur.withColumn("step", lit(t.toLong)))
-      }
-      acc
+    val starts = adj.select(col("src")).distinct()
+      .select(col("src").as("start"), col("src").as("node"))
+    val steps = Rounds.frames(spark, starts, WALK_LEN, aqe = false) { (cur, t) =>
+      val pick = pmod(graft.functions.DetHash.md5Long28(
+        concat_ws("#", col("node"), lit(t), col("start"))), col("deg")) + 1
+      cur.join(adj, col("node") === col("src"))
+        .filter(col("rnk") === pick)
+        .select(col("start"), col("dst").as("node"))
     }
-    withoutAqe(spark)(walk())
+    steps.zipWithIndex
+      .map { case (cur, t) => cur.withColumn("step", lit(t.toLong)) }
+      .reduce(_ union _)
       .select(col("start"), col("step"), col("node"))
       .orderBy("start", "step")
   }

@@ -1201,16 +1201,11 @@ object Relational {
     * plan spec asserts on exactly what the gate runs.
     */
   def bloomJoinFrame(spark: SparkSession, dir: String): DataFrame = {
-    val s = bloomSessions.synchronized {
-      val cached = bloomSessions.get(spark)
-      if (cached != null) cached
-      else {
-        val child = spark.newSession()
-        child.conf.set(
-          "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-        bloomSessions.put(spark, child)
-        child
-      }
+    val s = bloomSessions.getOrElseUpdate(spark, ()) {
+      val child = spark.newSession()
+      child.conf.set(
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
+      child
     }
     Tables.lineitem(s, dir)
       .select(col("l_orderkey"), col("l_quantity")).hint("merge")
@@ -1224,13 +1219,8 @@ object Relational {
       .orderBy("o_orderpriority")
   }
 
-  /** One bloom-enabled child session per parent session. WeakHashMap is
-    * sound here (unlike the Dataset caches — see [[SessionCache]]): the
-    * child references the shared SparkContext, not the parent key, so
-    * entries are not self-referential and evict with the parent.
-    */
-  private val bloomSessions =
-    new java.util.WeakHashMap[SparkSession, SparkSession]()
+  /** One bloom-enabled child session per parent session. */
+  private val bloomSessions = new SessionCache[Unit, SparkSession]()
 
   private val HIST_BUCKETS = 16
 
@@ -2751,10 +2741,10 @@ object Relational {
     * subtree rollup.
     *
     * Scale shape: [[Q44_ROUNDS]] self-joins of one narrow row per node,
-    * both sides hash-partitioned on the join key, localCheckpoint per
-    * round (the g1 contract); the rollup is one tiny aggregate. At 1e9
-    * nodes the recursive-CTE formulation is 30+ dependent scans; this is
-    * 6.
+    * both sides hash-partitioned on the join key, run through [[Rounds]]
+    * (checkpointed rounds, AQE on as the session has it); the rollup is
+    * one tiny aggregate. At 1e9 nodes the recursive-CTE formulation is
+    * 30+ dependent scans; this is 6.
     */
   val q44HierarchyFlatten: Q = Q.sql(
     "q44_hierarchy_flatten",
@@ -2781,17 +2771,13 @@ object Relational {
         when(col("node") === 0, 0L).otherwise(1L).as("d"),
         when(col("node") === 0, lit(""))
           .otherwise(expr(s"cast((node - 1) div $Q44_FANOUT as string)")).as("p"))
-      .localCheckpoint()
-    var st = base
-    for (_ <- 1 to Q44_ROUNDS) {
-      st = st.as("a")
-        .join(st.as("b").hint("shuffle_hash"), col("a.j") === col("b.node"))
+    val st = Rounds(spark, base, Q44_ROUNDS, aqe = true)((cur, _) =>
+      cur.as("a")
+        .join(cur.as("b").hint("shuffle_hash"), col("a.j") === col("b.node"))
         .select(col("a.node").as("node"), col("b.j").as("j"),
           (col("a.d") + col("b.d")).as("d"),
           when(col("b.d") === 0, col("a.p"))
-            .otherwise(concat(col("a.p"), lit("/"), col("b.p"))).as("p"))
-        .localCheckpoint()
-    }
+            .otherwise(concat(col("a.p"), lit("/"), col("b.p"))).as("p")))
     val rs = st.groupBy(col("j").as("rroot")).agg(count(lit(1)).as("root_size"))
     st.join(broadcast(rs), col("j") === col("rroot"))
       .select(col("node"), col("j").as("root"), col("d").as("depth"),

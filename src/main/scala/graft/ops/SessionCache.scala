@@ -4,9 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Per-session memo for frames shared across queries. It holds two kinds:
   *
-  *  - plain memos (`new SessionCache`): `localCheckpoint` frames and small
-  *    artifacts that are eager already and own no cache entry, so a
-  *    superseded value needs no release;
+  *  - plain memos (`new SessionCache`): `localCheckpoint` frames, small
+  *    artifacts that are eager already and own no cache entry, and q37's
+  *    bloom child session, so a superseded value needs no release;
   *  - pins, through [[Pin.Shared]], which builds each value with [[Pin]]
   *    and passes [[Pin.release]] as `onReplace`.
   *

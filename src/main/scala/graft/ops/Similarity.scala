@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Q, Tables}
+import graft.functions.DetHash.md5Hex
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,10 +25,6 @@ object Similarity {
   private val PLANES = 4
   private val TOP_K = 10
   private val BUCKET_K = 5
-
-  private def md5Hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
 
   /** plane p, dim d → integer weight in [-500, 499], md5-derived. */
   private def planeWeight(p: Int, d: Int): Double =
@@ -1346,22 +1343,19 @@ object Similarity {
     kmCache.getOrElseUpdate(spark, dir) {
       val e = Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      var cent: DataFrame = e.filter(col("vec_id") < KM_K)
+      val init = e.filter(col("vec_id") < KM_K)
         .select(col("vec_id").as("cell"), posexplode(col("v")).as(Seq("pos", "x")))
         .select(col("cell"), col("pos").cast("bigint").as("pos"), col("x").as("c"))
-        .localCheckpoint()
-      for (_ <- 1 to KM_ROUNDS) {
+      Rounds(spark, init, KM_ROUNDS, aqe = true) { (cent, _) =>
         val sums = kmAssign(spark, dir, cent)
           .select(col("cell"), posexplode(col("v")).as(Seq("pos", "x")))
           .select(col("cell"), col("pos").cast("bigint").as("pos"), col("x"))
           .groupBy(col("cell"), col("pos"))
           .agg(sum(floor(col("x") * lit(1.0e7))).as("sq"), count(lit(1)).as("cnt"))
-        cent = cent.join(sums, Seq("cell", "pos"), "left")
+        cent.join(sums, Seq("cell", "pos"), "left")
           .select(col("cell"), col("pos"),
             coalesce(col("sq").cast("double") / lit(1.0e7) / col("cnt"), col("c")).as("c"))
-          .localCheckpoint()
       }
-      cent
     }
 
   /** Lloyd's k-means TRAINING — the index-build step every coarse
@@ -1388,10 +1382,11 @@ object Similarity {
     * Scale shape: per round, ONE corpus map stage against an 8-row
     * broadcast centroid table (no shuffle) + one (cell, pos) hash
     * aggregate with map-side partials (K·DIMS = 512 groups — constant,
-    * data-independent). The centroid frame is localCheckpoint-pinned per
-    * round (the g1 contract) so round r+1's lineage doesn't replay round
-    * r's corpus pass. At 100 TB this is Lloyd's exactly as a cluster
-    * runs it: linear passes, centroids always broadcast, never collected.
+    * data-independent). The rounds run through [[Rounds]] with AQE on:
+    * the centroid frame is checkpointed per round so round r+1's lineage
+    * doesn't replay round r's corpus pass. At 100 TB this is Lloyd's
+    * exactly as a cluster runs it: linear passes, centroids always
+    * broadcast, never collected.
     * Output: flat (cell, pos, centroid) + per-cell member count and
     * quantized inertia — the layout s3's assignment step consumes.
     */
@@ -1541,8 +1536,8 @@ object Similarity {
     * every greedy round joins the ≤probes×[[MMR_POOL]] pool against the
     * ≤probes×round selected set — kilobytes regardless of corpus size,
     * which is why MMR is always run AFTER candidate generation, never
-    * on the corpus. localCheckpoint per round (the g1 micro-stage
-    * contract, AQE off).
+    * on the corpus. The rounds run through [[Rounds]] with AQE on, as
+    * the session has it.
     */
   val s17MmrDiversify: Q = Q.sql(
     "s17_mmr_diversify",
@@ -1616,15 +1611,15 @@ object Similarity {
       .select(col("probe_id"), col("cand_id"), col("rel"), col("cv"), col("cnrm"))
       .localCheckpoint()
     val pickW = Window.partitionBy(col("probe_id")).orderBy(col("score").desc, col("cand_id"))
-    var sel = cand
+    val first = cand
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("probe_id")).orderBy(col("rel").desc, col("cand_id"))))
       .filter(col("rn") === 1)
       .select(col("probe_id"), col("cand_id"), lit(1L).as("pick"), col("rel"),
         (lit(MMR_LAMBDA) * col("rel")).as("score"))
-      .localCheckpoint()
     val pairCos = Dedup.cosineCol(col("cv"), col("sv"), col("cnrm"), col("snrm"))
-    for (k <- 2 to MMR_OUT) {
+    // round r picks the (r+1)-th neighbor
+    Rounds(spark, first, MMR_OUT - 1, aqe = true) { (sel, r) =>
       val selV = sel.join(cand.select(col("probe_id").as("sp"),
           col("cand_id").as("sc"), col("cv").as("sv"), col("cnrm").as("snrm")),
         col("probe_id") === col("sp") && col("cand_id") === col("sc"))
@@ -1642,11 +1637,10 @@ object Similarity {
           lit(MMR_LAMBDA) * col("rel") - lit(1 - MMR_LAMBDA) * col("mpen"))
         .withColumn("rn", row_number().over(pickW))
         .filter(col("rn") === 1)
-        .select(col("probe_id"), col("cand_id"), lit(k.toLong).as("pick"),
+        .select(col("probe_id"), col("cand_id"), lit(r + 1L).as("pick"),
           col("rel"), col("score"))
-      sel = sel.union(pick).localCheckpoint()
+      sel.union(pick)
     }
-    Graph.withoutAqe(spark)(sel)
       .select(col("probe_id"), col("pick"), col("cand_id").as("neighbor_id"),
         round(col("rel"), 6).as("relevance"), round(col("score"), 6).as("mmr_score"))
       .orderBy("probe_id", "pick")
@@ -2011,19 +2005,17 @@ object Similarity {
       .withColumn("a", assignStructExpr(col("sv"), col("cents")))
       .select(col("vec_id"), col("sub"), col("sv"),
         col("a.cell").as("cell"), col("a.dist").as("dist"))
-    var cent: DataFrame = sv.filter(col("vec_id") < PQ_KC)
+    val init = sv.filter(col("vec_id") < PQ_KC)
       .select(col("sub"), col("vec_id").as("cell"),
         posexplode(col("sv")).as(Seq("pos", "c")))
-      .localCheckpoint()
-    for (_ <- 1 to PQ_ROUNDS) {
-      val s = assign(cent)
+    val cent = Rounds(spark, init, PQ_ROUNDS, aqe = true) { (prev, _) =>
+      val s = assign(prev)
         .select(col("sub"), col("cell"), posexplode(col("sv")).as(Seq("pos", "x")))
         .groupBy(col("sub"), col("cell"), col("pos"))
         .agg(sum(floor(col("x") * lit(1.0e7))).as("sq"), count(lit(1)).as("cnt"))
-      cent = cent.join(s, Seq("sub", "cell", "pos"), "left")
+      prev.join(s, Seq("sub", "cell", "pos"), "left")
         .select(col("sub"), col("cell"), col("pos"),
           coalesce(col("sq").cast("double") / 1.0e7 / col("cnt"), col("c")).as("c"))
-        .localCheckpoint()
     }
     val stats = assign(cent)
       .groupBy(col("sub"), col("cell"))

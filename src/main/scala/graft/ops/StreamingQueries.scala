@@ -64,15 +64,14 @@ object StreamingQueries {
       mode: OutputMode, sink: Sink, checkpoint: Option[String] = None): Unit = {
     val ckpt = checkpoint.getOrElse(Scratch.dir(s"graft_ckpt_$name"))
     val key = "spark.sql.shuffle.partitions"
-    val saved = spark.conf.get(key)
-    if (saved.toInt > HarnessConf.streamPartitions)
-      spark.conf.set(key, HarnessConf.streamPartitions.toString)
-    try sink(df.writeStream
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()))
-      .start().awaitTermination()
-    finally spark.conf.set(key, saved)
+    val cap = math.min(spark.conf.get(key).toInt, HarnessConf.streamPartitions)
+    HarnessConf.withConf(spark, key, cap.toString) {
+      sink(df.writeStream
+          .outputMode(mode)
+          .option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow()))
+        .start().awaitTermination()
+    }
     if (checkpoint.isEmpty) Scratch.drop(ckpt)
   }
 

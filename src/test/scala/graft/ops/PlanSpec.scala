@@ -1247,7 +1247,7 @@ class PlanSpec extends AnyFunSuite {
     dedges.count()
     val rank = spark.range(0, 100)
       .select(col("id").as("node"), lit(1000000L).as("r"))
-    try Graph.withoutAqe(spark) {
+    try Rounds.withoutAqe(spark) {
       val step = Graph.contribSum(dedges, broadcast(rank))
       step.collect()
       val p = step.queryExecution.executedPlan.toString
@@ -1272,7 +1272,7 @@ class PlanSpec extends AnyFunSuite {
     edges2.count()
     val dist = spark.range(0, 50)
       .select(col("id").as("node"), lit(0).as("dist"))
-    try Graph.withoutAqe(spark) {
+    try Rounds.withoutAqe(spark) {
       val step = Graph.relaxMin(edges2, dist)
       step.collect()
       val p = step.queryExecution.executedPlan.toString

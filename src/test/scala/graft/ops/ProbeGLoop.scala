@@ -19,7 +19,7 @@ object ProbeGLoop {
     val spark = SparkSession.builder()
       .master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "false") // the loops run withoutAqe
+      .config("spark.sql.adaptive.enabled", "false") // as Rounds runs the small-path loops
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
