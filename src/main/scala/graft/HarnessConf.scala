@@ -157,12 +157,15 @@ object HarnessConf {
     spark
   }
 
-  /** Runs `body` with the session conf `key` set to `value`, then puts
-    * the session's own setting back, also when `body` throws.
+  /** Runs `body` with each session conf `key -> value` set, then puts the
+    * session's own setting of every key back (unset where it had none),
+    * also when `body` throws.
     */
-  def withConf[A](spark: SparkSession, key: String, value: String)(body: => A): A = {
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  def withConf[A](spark: SparkSession, confs: (String, String)*)(body: => A): A = {
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 }

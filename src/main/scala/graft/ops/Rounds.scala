@@ -59,7 +59,7 @@ private[ops] object Rounds {
 
   /** Runs `body` with AQE off, restoring the session's setting after. */
   def withoutAqe[A](spark: SparkSession)(body: => A): A =
-    HarnessConf.withConf(spark, "spark.sql.adaptive.enabled", "false")(body)
+    HarnessConf.withConf(spark, "spark.sql.adaptive.enabled" -> "false")(body)
 
   /** `body` with AQE off when `aqe` is false, else as the session has it:
     * a checkpoint a loop takes after its rounds (g1, g5) runs with the

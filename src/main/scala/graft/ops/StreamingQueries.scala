@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{HarnessConf, Q, Tables}
-import graft.streaming.EventsStream
+import graft.streaming.{EventsStream, NioCheckpointFileManager}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
@@ -54,7 +54,10 @@ object StreamingQueries {
     * dwarfs the data, so the stream runs with a bounded partition count
     * (state sharding is per-key within a partition — results are
     * identical; a 100 TB deployment raises it back via the same conf).
-    * The session's own count is restored however the run ends.
+    * Every checkpoint file (offsets, commits, state store) goes through
+    * [[NioCheckpointFileManager]], which starts no process per file. The
+    * session's own settings of both keys are restored however the run
+    * ends; the query's cloned session takes them at `start()`.
     *
     * Without `checkpoint` the runner makes a scratch checkpoint and
     * deletes it once the query has terminated; a caller-supplied one
@@ -65,7 +68,7 @@ object StreamingQueries {
     val ckpt = checkpoint.getOrElse(Scratch.dir(s"graft_ckpt_$name"))
     val key = "spark.sql.shuffle.partitions"
     val cap = math.min(spark.conf.get(key).toInt, HarnessConf.streamPartitions)
-    HarnessConf.withConf(spark, key, cap.toString) {
+    HarnessConf.withConf(spark, key -> cap.toString, NioCheckpointFileManager.conf) {
       sink(df.writeStream
           .outputMode(mode)
           .option("checkpointLocation", ckpt)

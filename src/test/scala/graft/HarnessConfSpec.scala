@@ -38,4 +38,38 @@ class HarnessConfSpec extends AnyFunSuite {
     Seq("spark.master", "spark.ui.enabled", "spark.cleaner.periodicGC.interval")
       .foreach(k => assert(ctx.get(k) === recipe(k), k))
   }
+
+  // one key the session sets and one it leaves unset
+  private val (setKey, unsetKey) =
+    ("spark.sql.shuffle.partitions", "spark.sql.streaming.checkpointFileManagerClass")
+
+  /** Runs `run` against the test session; both keys must read as before. */
+  private def restoresBoth(run: org.apache.spark.sql.SparkSession => Unit): Unit = {
+    val spark = TestSpark.spark
+    val before = spark.conf.get(setKey)
+    assert(spark.conf.getOption(unsetKey).isEmpty, s"$unsetKey is set in the test session")
+    run(spark)
+    assert(spark.conf.get(setKey) === before)
+    assert(spark.conf.getOption(unsetKey).isEmpty)
+  }
+
+  test("withConf sets every key for the body and restores each after it, unset ones unset") {
+    restoresBoth { spark =>
+      val inside = HarnessConf.withConf(spark, setKey -> "7", unsetKey -> "x.Y") {
+        (spark.conf.get(setKey), spark.conf.get(unsetKey))
+      }
+      assert(inside === (("7", "x.Y")))
+    }
+  }
+
+  test("withConf restores every key when the body throws") {
+    restoresBoth { spark =>
+      val e = intercept[IllegalStateException] {
+        HarnessConf.withConf(spark, setKey -> "7", unsetKey -> "x.Y") {
+          throw new IllegalStateException("body failed")
+        }
+      }
+      assert(e.getMessage === "body failed")
+    }
+  }
 }

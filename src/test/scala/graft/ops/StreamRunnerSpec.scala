@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{HarnessConf, Tables, TestSpark}
-import graft.streaming.EventsStream
+import graft.streaming.{EventsStream, NioCheckpointFileManager}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener}
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,14 +9,16 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** The one stream runner ([[StreamingQueries.runStream]]): the session's
-  * shuffle partition count is capped for the run and restored however it
-  * ends, and the checkpoint the runner made itself is freed once the
-  * query terminates while the drained sink stays readable.
+  * shuffle partition count is capped and the checkpoint file manager set
+  * for the run, both restored however it ends, and the checkpoint the
+  * runner made itself is freed once the query terminates while the
+  * drained sink stays readable.
   */
 class StreamRunnerSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf0001
   private val key = "spark.sql.shuffle.partitions"
+  private val (managerKey, manager) = NioCheckpointFileManager.conf
   // above the stream cap, so the runner has something to cap and restore
   private val wide = (HarnessConf.streamPartitions + 3).toString
 
@@ -31,24 +33,20 @@ class StreamRunnerSpec extends AnyFunSuite {
 
   private def ids = EventsStream.read(spark, eventsDir).select(col("event_id"))
 
-  private def withWidePartitions(body: => Unit): Unit = {
-    val saved = spark.conf.get(key)
-    spark.conf.set(key, wide)
-    try body finally spark.conf.set(key, saved)
-  }
-
   test("runStream caps shuffle partitions for the run and restores them after") {
-    withWidePartitions {
-      val seen = new java.util.concurrent.atomic.AtomicReference[String]()
+    HarnessConf.withConf(spark, key -> wide) {
+      val seen = new java.util.concurrent.atomic.AtomicReference[(String, Option[String])]()
       StreamingQueries.runStream(spark, "runner_spec_ok", ids, OutputMode.Append(),
-        StreamingQueries.batchSink((b, _) => seen.set(b.sparkSession.conf.get(key))))
-      assert(seen.get == HarnessConf.streamPartitions.toString)
+        StreamingQueries.batchSink((b, _) =>
+          seen.set((b.sparkSession.conf.get(key), b.sparkSession.conf.getOption(managerKey)))))
+      assert(seen.get == ((HarnessConf.streamPartitions.toString, Some(manager))))
       assert(spark.conf.get(key) == wide)
+      assert(spark.conf.getOption(managerKey).isEmpty)
     }
   }
 
   test("runStream restores shuffle partitions after a run whose sink throws") {
-    withWidePartitions {
+    HarnessConf.withConf(spark, key -> wide) {
       val e = intercept[Exception] {
         StreamingQueries.runStream(spark, "runner_spec_fail", ids, OutputMode.Append(),
           StreamingQueries.batchSink((_, _) => throw new IllegalStateException("sink failed")))
@@ -56,6 +54,7 @@ class StreamRunnerSpec extends AnyFunSuite {
       assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
         .exists(t => String.valueOf(t.getMessage).contains("sink failed")), e)
       assert(spark.conf.get(key) == wide)
+      assert(spark.conf.getOption(managerKey).isEmpty)
     }
   }
 
