@@ -25,14 +25,6 @@ object HarnessConf {
     */
   val shufflePartitions: Option[String] = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
 
-  /** SPARK_GRAFT_SCRATCH_DISK=<path> adds a disk root next to the tmpfs
-    * root in `spark.local.dir`: Spark round-robins shuffle/spill blocks
-    * across the two, halving the RAM pressure of tmpfs-only scratch
-    * (the sf100 OOM class) the way executor-local NVMe would on a real
-    * cluster.
-    */
-  val scratchDisk: Option[String] = sys.env.get("SPARK_GRAFT_SCRATCH_DISK")
-
   /** SPARK_GRAFT_BENCH_ONLY=<comma-separated names> makes Bench time only
     * those registry queries (dev subset; unset = the full registry).
     */
@@ -66,19 +58,6 @@ object HarnessConf {
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     else Map.empty
 
-  /** SPARK_GRAFT_SHUFFLE_ZSTD=1 switches shuffle/spill block compression
-    * from lz4 to zstd. Soak-scale runs are scratch-BYTES-bound, not
-    * CPU-bound (the sf100 pair mine writes an ~11B-row exchange whose
-    * lz4 footprint exceeds this box's tmpfs+disk scratch); zstd's ~2×
-    * better ratio on packed integer shuffle blocks is the difference
-    * between fitting and ENOSPC. Default stays lz4 (Spark's default) so
-    * gate/bench scales measure the stock configuration.
-    */
-  val shuffleCodecConf: Map[String, String] =
-    if (sys.env.get("SPARK_GRAFT_SHUFFLE_ZSTD").contains("1"))
-      Map("spark.io.compression.codec" -> "zstd")
-    else Map.empty
-
   /** GRAFT_STREAM_PARTITIONS (default 4) caps `spark.sql.shuffle.partitions`
     * while a `graft.ops.StreamingQueries` stream runs: the state store
     * writes one file per shuffle partition per stateful operator per
@@ -88,19 +67,17 @@ object HarnessConf {
   val streamPartitions: Int = sys.env.getOrElse("GRAFT_STREAM_PARTITIONS", "4").toInt
 
   /** All shared dev/soak session extras, applied on top of the recipe. */
-  val extraConf: Map[String, String] = stateStoreConf ++ shuffleCodecConf
+  val extraConf: Map[String, String] = stateStoreConf
 
   /** The session recipe as a conf map: `local[cpus]`, one shuffle
     * partition per core, UTC. Pure, so a spec pins it. `localDir` is the
-    * tmpfs scratch root and `diskDir` the optional disk root; Spark
-    * round-robins blocks across the listed dirs.
+    * tmpfs scratch root.
     *
     * `spark.local.dir` precedence: a `SPARK_LOCAL_DIRS` environment
     * variable overrides it (Spark's `Utils.getConfiguredLocalDirs`, as
-    * of spark-core 4.1.2), so under one both roots here are ignored.
+    * of spark-core 4.1.2), so under one `localDir` is ignored.
     */
-  def sessionConf(cpus: Int, localDir: String,
-      diskDir: Option[String] = None): Map[String, String] = Map(
+  def sessionConf(cpus: Int, localDir: String): Map[String, String] = Map(
     "spark.master" -> s"local[$cpus]",
     "spark.sql.shuffle.partitions" -> shufflePartitions.getOrElse(cpus.toString),
     "spark.ui.enabled" -> "false",
@@ -121,7 +98,7 @@ object HarnessConf {
     // while CPU calibration stays clean); RAM-backed local dirs take
     // host disk out of the measurement. A real cluster points this at
     // executor-local NVMe.
-    "spark.local.dir" -> (localDir +: diskDir.toSeq).mkString(","),
+    "spark.local.dir" -> localDir,
     // single-use localCheckpoint pins (d12 windows, t14 bigrams…)
     // become garbage the moment their query's count() ends, but
     // ContextCleaner only reaps them after a DRIVER GC — and the
@@ -139,8 +116,7 @@ object HarnessConf {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     val spark = SparkSession.builder()
-      .config(sessionConf(cpus, ops.Scratch.dir(scratchTag),
-        scratchDisk.map(ops.Scratch.dirAt(_, scratchTag))))
+      .config(sessionConf(cpus, ops.Scratch.dir(scratchTag)))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // when AQE cancels a superseded stage (runtime join replan), actually

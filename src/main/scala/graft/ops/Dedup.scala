@@ -73,7 +73,7 @@ object Dedup {
     * 100 TB this materialization is the shingle index you'd write to
     * storage once and reuse across the dedup suite.
     */
-  private val shingleCache = new Pin.Shared[String, DataFrame]
+  private val shingleCache = Pin.Shared.pinned[String, DataFrame]
 
   private[ops] def shingledDocs(spark: SparkSession, dir: String): DataFrame =
     // one persisted shingle frame per (session, dataset): d2 and d3 both
@@ -228,9 +228,9 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), round(j, 6).as("jaccard"))
   }
 
-  private val pairCache = new SessionCache[(String, Double), DataFrame]()
+  private val pairCache = Pin.Shared.checkpointed[(String, Double)]
 
-  private val prefixIdxCache = new SessionCache[(String, Double), DataFrame]()
+  private val prefixIdxCache = Pin.Shared.checkpointed[(String, Double)]
 
   /** The materialized prefix index, persisted once per (session, dataset,
     * threshold) and shared by d2 (self-join candidates) and d8 (prefix ×
@@ -244,8 +244,8 @@ object Dedup {
     * (measured: later bench queries degraded 5-10× for minutes).
     */
   private def prefixIndexCached(spark: SparkSession, dir: String, t: Double): DataFrame =
-    prefixIdxCache.getOrElseUpdate(spark, (dir, t)) {
-      // localCheckpoint, not persist: same eager barrier (one job, the
+    prefixIdxCache(spark, (dir, t)) {
+      // checkpointed, not pinned: same eager barrier (one job, the
       // AQE-zombie guard) but the lineage is TRUNCATED, so the ~45 GB of
       // construction shuffle behind the index (1B-row df back-join +
       // collect_list regroup) becomes ContextCleaner-reapable instead of
@@ -256,7 +256,7 @@ object Dedup {
       // at sf100 checkpointing its ~600M raw rows measured slower than
       // recomputing it per consumer, and its transient shuffle files
       // are reaped between queries.
-      prefixIndexFrom(postings(shingledDocs(spark, dir)), t).localCheckpoint()
+      prefixIndexFrom(postings(shingledDocs(spark, dir)), t)
     }
 
   /** Verified jaccard ≥ t pairs, persisted once per (session, dataset,
@@ -264,7 +264,7 @@ object Dedup {
     * 100 TB this is the pair table a dedup run materializes once.
     */
   private def jaccardPairs(spark: SparkSession, dir: String, t: Double): DataFrame =
-    pairCache.getOrElseUpdate(spark, (dir, t)) {
+    pairCache(spark, (dir, t)) {
       val docs = shingledDocs(spark, dir)
       // the prefix index is materialized ONCE (see prefixIndexCached —
       // its count() barrier is what keeps AQE from cancelling a racing
@@ -274,10 +274,10 @@ object Dedup {
       // persisted instead of being dropped after the pair build.
       val idx = prefixIndexCached(spark, dir, t)
       val cand = prefixSelfJoin(idx)
-      // localCheckpoint: eager (the pair table is the product) and the
+      // checkpointed: eager (the pair table is the product) and the
       // candidate-distinct + verify-join shuffles behind it become
       // reapable (see prefixIndexCached)
-      jaccardVerify(docs, cand, t).localCheckpoint()
+      jaccardVerify(docs, cand, t)
     }
 
   /** Prefix-filtered pair pipeline (uncached), exposed for the
@@ -340,7 +340,7 @@ object Dedup {
   /** MinHash size — exposed for the streaming apply (w22). */
   private[ops] def minhashK: Int = K
 
-  private val bandCache = new Pin.Shared[String, DataFrame]
+  private val bandCache = Pin.Shared.pinned[String, DataFrame]
 
   /** Session-persisted LSH band index over the whole corpus:
     * `(doc_id, band, bh)` — one MinHash-signature pass ([[K]] hashes per
@@ -468,7 +468,7 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
   }
 
-  private val simHashCache = new Pin.Shared[String, DataFrame]
+  private val simHashCache = Pin.Shared.pinned[String, DataFrame]
 
   /** (doc_id, simhash) via the one-pass kernel — shared by d4 and specs;
     * persisted once per (session, dataset) like [[shingledDocs]].
@@ -570,7 +570,7 @@ object Dedup {
       .orderBy("vec_a", "vec_b")
   }
 
-  private val normedCache = new Pin.Shared[String, DataFrame]
+  private val normedCache = Pin.Shared.pinned[String, DataFrame]
 
   /** embeddings as (vec_id, v: array<double>, nrm, label) — persisted once
     * per (session, dataset); referenced by d5, s1, s2 and s3 (up to twice
@@ -638,7 +638,7 @@ object Dedup {
        |lab AS (SELECT doc, MIN(root) AS cluster_id FROM reach GROUP BY doc),
        |sz AS (SELECT cluster_id, COUNT(*) AS cluster_size FROM lab GROUP BY cluster_id)""".stripMargin
 
-  private val clusterCache = new Pin.Shared[String, DataFrame]
+  private val clusterCache = Pin.Shared.pinned[String, DataFrame]
 
   /** The cluster table (doc_id, cluster_id, cluster_size, is_canonical),
     * one row per clustered doc — computed once per (session, dataset) and

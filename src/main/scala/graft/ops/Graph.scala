@@ -43,7 +43,7 @@ object Graph {
     */
   private val BROADCAST_NODE_LIMIT = 50000000L
 
-  private val edgeCache = new Pin.Shared[String, DataFrame]
+  private val edgeCache = Pin.Shared.pinned[String, DataFrame]
 
   /** Undirected co-purchase edges: customer c bought from supplier s in
     * some order. Node ids interleave the two key spaces (customer → 2k,
@@ -361,7 +361,7 @@ object Graph {
        |    FROM eg)
        |  WHERE rn <= $DEGREE_CAP)""".stripMargin
 
-  private val incidenceCache = new SessionCache[String, DataFrame]()
+  private val incidenceCache = Pin.Shared.checkpointed[String]
 
   /** Uncached capped per-customer supplier ARRAY plan — exposed (with
     * [[pairMinePlan]]) so PlanSpec can pin that the degree cap is applied
@@ -404,9 +404,7 @@ object Graph {
     * mine, the exploded incidence view, and g3's degree frame.
     */
   private def cappedArrays(spark: SparkSession, dir: String): DataFrame =
-    incidenceCache.getOrElseUpdate(spark, dir) {
-      cappedArraysPlan(spark, dir).localCheckpoint()
-    }
+    incidenceCache(spark, dir)(cappedArraysPlan(spark, dir))
 
   /** Degree-capped customer→supplier incidence (see [[DEGREE_CAP]]) as
     * (c, s) rows — a map-side explode over the pinned [[cappedArrays]]
@@ -445,7 +443,7 @@ object Graph {
       .select(expr("shiftright(pk, 32)").as("s1"),
         expr("pk & 4294967295").as("s2"), col("co"))
 
-  private val pairCache = new Pin.Shared[String, DataFrame]
+  private val pairCache = Pin.Shared.pinned[String, DataFrame]
 
   /** Shared-customer counts per supplier pair (s1 < s2) — the pair-mine
     * aggregate both g3 (affinity top-k) and g4 (mutual-kNN triangles)
@@ -540,7 +538,7 @@ object Graph {
 
   private val MUTUAL_TOP = 8
 
-  private val mutualCache = new SessionCache[String, DataFrame]()
+  private val mutualCache = Pin.Shared.checkpointed[String]
 
   /** Oriented (x < y) mutual-top-[[MUTUAL_TOP]] partner edges — the
     * sparsified supplier graph g4 (triangles) and g5 (k-core) both run
@@ -550,7 +548,7 @@ object Graph {
     * per consumer query.
     */
   private[ops] def mutualEdges(spark: SparkSession, dir: String): DataFrame =
-    mutualCache.getOrElseUpdate(spark, dir) {
+    mutualCache(spark, dir) {
       val co = coPairs(spark, dir)
       val bidir = co
         .select(explode(array(
@@ -567,10 +565,9 @@ object Graph {
           col("a.s") === col("b.p") && col("a.p") === col("b.s") &&
             col("a.s") < col("a.p"))
         .select(col("a.s").as("x"), col("a.p").as("y"))
-        .localCheckpoint()
     }
 
-  private val wedgeCache = new SessionCache[String, DataFrame]()
+  private val wedgeCache = Pin.Shared.checkpointed[String]
 
   /** Wedge (distance-≤2 pair) common-neighbor counts over the mutual
     * graph: for every unordered pair u < v with at least one shared
@@ -590,7 +587,7 @@ object Graph {
     * tiny counted frame instead of re-running the mine.
     */
   private[ops] def wedgeCounts(spark: SparkSession, dir: String): DataFrame =
-    wedgeCache.getOrElseUpdate(spark, dir) {
+    wedgeCache(spark, dir) {
       val ed = mutualEdges(spark, dir)
         .select(explode(array(
           struct(col("x").as("src"), col("y").as("dst")),
@@ -601,7 +598,6 @@ object Graph {
         .filter(col("u") < col("v"))
         .groupBy(col("u"), col("v"))
         .agg(count(lit(1)).as("cn"))
-        .localCheckpoint()
     }
 
   /** Triangle count + local clustering coefficient over the mutual-top-K
@@ -875,7 +871,7 @@ object Graph {
 
   private val LPA_ROUNDS = 4
 
-  private val lpaCache = new SessionCache[String, DataFrame]()
+  private val lpaCache = Pin.Shared.memo[String, DataFrame]
 
   /** Final (node, label) frame after [[LPA_ROUNDS]] synchronous LPA rounds
     * over the mutual-top-[[MUTUAL_TOP]] partner graph — the loop g7
@@ -887,7 +883,7 @@ object Graph {
     * through [[Rounds]] with AQE off.
     */
   private[ops] def lpaLabels(spark: SparkSession, dir: String): DataFrame =
-    lpaCache.getOrElseUpdate(spark, dir) {
+    lpaCache(spark, dir) {
       val mut = mutualEdges(spark, dir)
       val ed = mut
         .select(explode(array(
@@ -1264,8 +1260,8 @@ object Graph {
   private[ops] val G11_MOD = 10
   private[ops] val G11_RES = 3
 
-  private val standingAdjCache = new SessionCache[String, DataFrame]()
-  private val standingDegCache = new SessionCache[String, DataFrame]()
+  private val standingAdjCache = Pin.Shared.checkpointed[String]
+  private val standingDegCache = Pin.Shared.checkpointed[String]
 
   private def isG11Batch =
     pmod(col("x") + col("y"), lit(G11_MOD)) === G11_RES
@@ -1284,23 +1280,21 @@ object Graph {
     * the pin makes that a cached-frame read).
     */
   private[ops] def standingAdj(spark: SparkSession, dir: String): DataFrame =
-    standingAdjCache.getOrElseUpdate(spark, dir) {
+    standingAdjCache(spark, dir) {
       mutualEdges(spark, dir).filter(!isG11Batch)
         .select(explode(array(
           struct(col("x").as("src"), col("y").as("dst")),
           struct(col("y").as("src"), col("x").as("dst")))).as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst"))
-        .localCheckpoint()
     }
 
   /** Standing per-node degree over [[standingAdj]], pinned (w24 joins it
     * per micro-batch; g11 broadcasts it twice).
     */
   private[ops] def standingDeg(spark: SparkSession, dir: String): DataFrame =
-    standingDegCache.getOrElseUpdate(spark, dir) {
+    standingDegCache(spark, dir) {
       standingAdj(spark, dir)
         .groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
-        .localCheckpoint()
     }
 
   /** Incremental edge apply — the d13/s21 move for graphs: a batch of

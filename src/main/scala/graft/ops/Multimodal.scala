@@ -158,7 +158,7 @@ object Multimodal {
     out.result()
   }
 
-  private val assetsCache = new Pin.Shared[String, Dataset[MediaAsset]]
+  private val assetsCache = Pin.Shared.pinned[String, Dataset[MediaAsset]]
 
   /** documents → binary assets with typed metadata (the ingest edge: in
     * production `content` would come off object storage). Image payloads
@@ -621,7 +621,7 @@ object Multimodal {
     * [[SIG_HAMMING_MAX]]), then exact hamming verifies. The d4 SimHash
     * shape applied to binary payloads instead of token streams.
     */
-  private val payloadDotsCache = new Pin.Shared[String, DataFrame]
+  private val payloadDotsCache = Pin.Shared.pinned[String, DataFrame]
 
   /** Per-(doc, plane) SimHash projections over payload byte histograms —
     * m6's signature kernel, session-persisted and shared with m16's
@@ -979,7 +979,7 @@ object Multimodal {
     frameDiffs(spark, dir).orderBy("doc_id", "frame_idx")
   }
 
-  private val frameDiffCache = new SessionCache[String, DataFrame]()
+  private val frameDiffCache = Pin.Shared.checkpointed[String]
 
   /** m10's per-consecutive-frame delta frame, DECODED ONCE per (session,
     * dataset): the real ImageIO per-frame decode dominates this family's
@@ -989,7 +989,7 @@ object Multimodal {
     * mirrored by the oracle's `range(1, nf)`.
     */
   private[ops] def frameDiffs(spark: SparkSession, dir: String): DataFrame =
-    frameDiffCache.getOrElseUpdate(spark, dir) {
+    frameDiffCache(spark, dir) {
       import spark.implicits._
       assets(spark, dir)
         .filter(_.meta.mediaType == "video")
@@ -1018,7 +1018,6 @@ object Multimodal {
           }
         }
         .toDF()
-        .localCheckpoint()
     }
 
   private val PATCH = 4
@@ -1418,8 +1417,8 @@ object Multimodal {
   private[ops] val M16_MOD = 20
   private[ops] val M16_RES = 7
 
-  private val sigCenterCache = new SessionCache[String, DataFrame]()
-  private val sigIdxCache = new Pin.Shared[String, DataFrame]
+  private val sigCenterCache = Pin.Shared.checkpointed[String]
+  private val sigIdxCache = Pin.Shared.pinned[String, DataFrame]
 
   /** The STANDING SimHash center: per-plane projection sums over the
     * corpus only (batch residue EXCLUDED) — the quantizer statistic the
@@ -1428,12 +1427,11 @@ object Multimodal {
     * 16 rows, pinned.
     */
   private[ops] def sigCenter(spark: SparkSession, dir: String): DataFrame =
-    sigCenterCache.getOrElseUpdate(spark, dir) {
+    sigCenterCache(spark, dir) {
       payloadDots(spark, dir)
         .filter(col("doc_id") % M16_MOD =!= M16_RES)
         .groupBy(col("p"))
         .agg(sum(col("dot")).as("gp"), sum(col("n_doc")).as("tot"))
-        .localCheckpoint()
     }
 
   /** The session-persisted payload-signature INDEX over the standing
@@ -1448,7 +1446,7 @@ object Multimodal {
         sigCenter(spark, dir))
     }
 
-  private val sigGroupCache = new Pin.Shared[String, DataFrame]
+  private val sigGroupCache = Pin.Shared.pinned[String, DataFrame]
 
   /** [[payloadSigIndex]] collapsed to its distinct signature values:
     * `(sig_b, cnt, min_doc)` — at most 2^SIG_PLANES = 65536 rows
@@ -1477,7 +1475,7 @@ object Multimodal {
         .agg(count(lit(1)).as("cnt"), min(col("doc_id")).as("min_doc"))
     }
 
-  private val signArtCache = new SessionCache[String, DataFrame]()
+  private val signArtCache = Pin.Shared.checkpointed[String]
 
   /** The PUBLISHED signing artifact as ONE broadcastable row — `art:
     * array<struct<p, bitv, gp, tot, wv>>` sorted by plane, where `wv` is
@@ -1488,7 +1486,7 @@ object Multimodal {
     * stream-static join is re-evaluated per micro-batch.
     */
   private[ops] def signArtifactRow(spark: SparkSession, dir: String): DataFrame = {
-    signArtCache.getOrElseUpdate(spark, dir) {
+    signArtCache(spark, dir) {
       val wv = planeWeights(spark)
         .groupBy(col("p"))
         .agg(transform(sort_array(collect_list(struct(col("wbyte"), col("w")))),
@@ -1497,7 +1495,6 @@ object Multimodal {
         .agg(sort_array(collect_list(struct(col("p"),
           expr("shiftleft(1L, p)").as("bitv"),
           col("gp"), col("tot"), col("wv")))).as("art"))
-        .localCheckpoint()
     }
   }
 

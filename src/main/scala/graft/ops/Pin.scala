@@ -1,6 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import java.lang.ref.SoftReference
+
+import scala.collection.concurrent.TrieMap
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** The one place in `graft.ops` that persists a frame. Every persisted
@@ -21,6 +26,28 @@ import org.apache.spark.storage.StorageLevel
   *
   * `localCheckpoint` frames are not pins: they are eager already and
   * truncate lineage, and `Dataset.unpersist` cannot free their blocks.
+  *
+  * It is also the one registry of values shared across the queries of a
+  * session, [[Shared]]. Each shared memo declares how it keeps a value:
+  *
+  *  - [[Shared.pinned]]: persisted through [[Pin]]; a superseded value
+  *    is released with [[release]];
+  *  - [[Shared.checkpointed]]: `localCheckpoint`ed, so eager, with its
+  *    lineage cut and no cache entry;
+  *  - [[Shared.memo]]: kept as built, for a value that is cut already
+  *    (a [[Rounds]] output) or is not a frame.
+  *
+  * Lifecycle: sessions are WEAK keys and values SOFT, which prevents the
+  * self-referential strong chain (a Dataset strongly references its own
+  * SparkSession — the WeakHashMap javadoc's warning case) from holding
+  * sessions for the JVM lifetime. It does NOT reclaim persisted storage
+  * blocks under memory pressure — those are tracked by the session's
+  * CacheManager until the session ends, which is the intended lifetime
+  * for a materialized index in a long-lived engine session. A cleared
+  * soft reference means the next request rebuilds (and re-pins) the
+  * value; if the superseded pin is still reachable then, it is released,
+  * so rebuilds don't accumulate orphaned cached data under exactly the
+  * memory pressure that cleared the reference.
   */
 private[ops] object Pin {
 
@@ -47,14 +74,38 @@ private[ops] object Pin {
   def during[D <: Dataset[_], A](ds: D)(body: D => A): A =
     try body(Pin(ds)) finally release(ds)
 
-  /** A per-session memo of pins: one pinned frame per (session, key),
-    * built on first use. A rebuild after the soft value was cleared
-    * releases the superseded pin if it is still reachable.
+  /** A per-session memo: one value per (session, key), built on first
+    * use and kept as its kind declares (see [[Pin]]). A build that throws
+    * leaves no entry.
     */
-  final class Shared[K, D <: Dataset[_]] {
-    private val cache = new SessionCache[K, D](release)
+  final class Shared[K, V <: AnyRef] private (keep: V => V, onReplace: V => Unit) {
+    private val maps = mutable.WeakHashMap.empty[SparkSession, TrieMap[K, SoftReference[V]]]
 
-    def apply(spark: SparkSession, key: K)(build: => D): D =
-      cache.getOrElseUpdate(spark, key)(Pin(build))
+    def apply(spark: SparkSession, key: K)(build: => V): V = {
+      val inner = maps.synchronized(maps.getOrElseUpdate(spark, TrieMap.empty))
+      inner.get(key).flatMap(r => Option(r.get())).getOrElse {
+        // built outside any lock: concurrent distinct-key builds stay
+        // parallel; a same-key race builds twice and last-write wins
+        // (both values are equivalent)
+        val v = keep(build)
+        val old = inner.put(key, new SoftReference(v))
+        // the soft ref may have been cleared while the value itself is
+        // still strongly held elsewhere (e.g. a caller kept it)
+        old.flatMap(r => Option(r.get())).filter(_ ne v).foreach { stale =>
+          try onReplace(stale)
+          catch { case scala.util.control.NonFatal(_) => () }
+        }
+        v
+      }
+    }
+  }
+
+  object Shared {
+    def pinned[K, D <: Dataset[_]]: Shared[K, D] = new Shared[K, D](Pin(_), release)
+
+    def checkpointed[K]: Shared[K, DataFrame] =
+      new Shared[K, DataFrame](_.localCheckpoint(), _ => ())
+
+    def memo[K, V <: AnyRef]: Shared[K, V] = new Shared[K, V](identity, _ => ())
   }
 }

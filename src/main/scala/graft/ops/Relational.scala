@@ -1201,7 +1201,7 @@ object Relational {
     * plan spec asserts on exactly what the gate runs.
     */
   def bloomJoinFrame(spark: SparkSession, dir: String): DataFrame = {
-    val s = bloomSessions.getOrElseUpdate(spark, ()) {
+    val s = bloomSessions(spark, ()) {
       val child = spark.newSession()
       child.conf.set(
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
@@ -1220,7 +1220,7 @@ object Relational {
   }
 
   /** One bloom-enabled child session per parent session. */
-  private val bloomSessions = new SessionCache[Unit, SparkSession]()
+  private val bloomSessions = Pin.Shared.memo[Unit, SparkSession]
 
   private val HIST_BUCKETS = 16
 

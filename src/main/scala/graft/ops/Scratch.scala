@@ -8,7 +8,7 @@ import org.apache.spark.sql.DataFrame
 /** The one place in `graft` that makes scratch directories, stages a
   * dataset's derived copy once per JVM, and lays out stream input files.
   *
-  *  - [[dir]] / [[dirAt]]: a fresh `graft_*` directory, deleted at JVM
+  *  - [[dir]]: a fresh `graft_*` directory, deleted at JVM
   *    exit (or earlier by [[drop]]). Checkpoints, staged inputs, drained
   *    sinks and the session's `spark.local.dir` all come from here.
   *  - [[once]]: a JVM-wide memo of staged copies, keyed by (tag, dataset).
@@ -77,20 +77,6 @@ private[graft] object Scratch {
       System.err.println(s"[graft] scratch root: $rootClass " +
         s"(usable ${p.getParent.toFile.getUsableSpace / (1024 * 1024)} MiB)")
     register(p)
-  }
-
-  /** Scratch dir under an EXPLICIT root (registered for shutdown
-    * cleanup like [[dir]]): used to add a disk root next to the
-    * tmpfs root in `spark.local.dir` — Spark round-robins shuffle/spill
-    * blocks across the listed dirs, so a RAM-backed-only scratch (which
-    * competes with the heap for physical RAM and OOM-killed the sf100
-    * soak at ~70 GB of spill) splits its pressure with the disk, the
-    * way executor-local NVMe would on a real cluster.
-    */
-  def dirAt(rootPath: String, prefix: String): String = {
-    val root = Paths.get(rootPath)
-    Files.createDirectories(root)
-    register(Files.createTempDirectory(root, prefix))
   }
 
   private val staged = scala.collection.concurrent.TrieMap.empty[(String, String), Any]

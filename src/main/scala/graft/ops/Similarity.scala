@@ -1294,7 +1294,7 @@ object Similarity {
        |         COALESCE(CAST(s.sq AS DOUBLE) / 10000000.0 / s.cnt, p.c) AS c
        |  FROM c${r - 1} p LEFT JOIN s$r s ON p.cell = s.cell AND p.pos = s.pos)""".stripMargin
 
-  private val kmCache = new SessionCache[String, DataFrame]()
+  private val kmCache = Pin.Shared.memo[String, DataFrame]
 
   /** Per-cell centroid ARRAYS from the flat (cell, pos, c) frame —
     * sort_array on (pos, c) structs reassembles index order
@@ -1340,7 +1340,7 @@ object Similarity {
     * flat (cell, pos, c) layout.
     */
   private[ops] def trainedCentroids(spark: SparkSession, dir: String): DataFrame =
-    kmCache.getOrElseUpdate(spark, dir) {
+    kmCache(spark, dir) {
       val e = Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       val init = e.filter(col("vec_id") < KM_K)
@@ -2116,15 +2116,15 @@ object Similarity {
       "ELSE CAST(least(CAST(255.0 AS DOUBLE), greatest(CAST(0.0 AS DOUBLE), " +
       "floor((x - lo[i]) / (hi[i] - lo[i]) * 255.0 + 0.5))) AS BIGINT) END)")
 
-  private val sq8StatsCache = new SessionCache[String, DataFrame]()
-  private val annIdxCache = new Pin.Shared[String, DataFrame]
+  private val sq8StatsCache = Pin.Shared.checkpointed[String]
+  private val annIdxCache = Pin.Shared.pinned[String, DataFrame]
 
   /** The standing SQ8 quantizer stats: per-dimension corpus min/max
     * (batch residue EXCLUDED — new vectors are encoded with stats that
     * never saw them), one pinned row of (lo[], hi[]) arrays.
     */
   private[ops] def sq8CorpusStats(spark: SparkSession, dir: String): DataFrame =
-    sq8StatsCache.getOrElseUpdate(spark, dir) {
+    sq8StatsCache(spark, dir) {
       Tables.embeddings(spark, dir)
         .filter(col("vec_id") % S21_MOD =!= S21_RES)
         .select(col("embedding").cast("array<double>").as("v"))
@@ -2134,7 +2134,6 @@ object Similarity {
           sort_array(collect_list(struct(col("pos"), col("mx")))).as("his"))
         .select(transform(col("los"), s => s("mn")).as("lo"),
           transform(col("his"), s => s("mx")).as("hi"))
-        .localCheckpoint()
     }
 
   /** The session-persisted ANN INDEX over the standing corpus (batch

@@ -418,7 +418,7 @@ object TextAnalysis {
     * op. Shuffles: tf agg, df agg, term-keyed pair join, pair agg — all
     * equi-keyed with map-side partials.
     */
-  private val tfidfCache = new Pin.Shared[String, org.apache.spark.sql.DataFrame]
+  private val tfidfCache = Pin.Shared.pinned[String, org.apache.spark.sql.DataFrame]
 
   /** The per-doc top-5 distinctive-trigram index (doc_id, tk, w):
     * persisted once per (session, dataset) — the t11 plan references it

@@ -22,12 +22,6 @@ class HarnessConfSpec extends AnyFunSuite {
       "spark.cleaner.periodicGC.interval" -> "45s"))
   }
 
-  test("a SPARK_GRAFT_SCRATCH_DISK root follows the tmpfs root in spark.local.dir") {
-    assert(HarnessConf.sessionConf(4, "/shm/a", Some("/disk/b"))("spark.local.dir") ===
-      "/shm/a,/disk/b")
-    assert(HarnessConf.sessionConf(4, "/shm/a", None)("spark.local.dir") === "/shm/a")
-  }
-
   test("TestSpark.spark carries the recipe's confs") {
     val spark = TestSpark.spark
     val recipe = HarnessConf.sessionConf(4, "unused")
