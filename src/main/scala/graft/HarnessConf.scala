@@ -44,20 +44,6 @@ object HarnessConf {
   val benchOut: String = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
     java.nio.file.Paths.get(sys.props("user.dir"), "bench_out.json").toString)
 
-  /** SPARK_GRAFT_STATESTORE=rocksdb routes streaming state through the
-    * RocksDB provider instead of the default HDFS-backed in-memory map.
-    * At 100 TB the w-family's session/join state outgrows executor heap
-    * and RocksDB (native, spill-to-disk, incremental checkpoints) is
-    * the knob a deployment turns; this lets Bench measure what it costs
-    * and Verify prove result-parity at scales where state still fits in
-    * memory.
-    */
-  val stateStoreConf: Map[String, String] =
-    if (sys.env.get("SPARK_GRAFT_STATESTORE").contains("rocksdb"))
-      Map("spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    else Map.empty
-
   /** GRAFT_STREAM_PARTITIONS (default 4) caps `spark.sql.shuffle.partitions`
     * while a `graft.ops.StreamingQueries` stream runs: the state store
     * writes one file per shuffle partition per stateful operator per
@@ -65,9 +51,6 @@ object HarnessConf {
     * sets a stream's time. Sessions with fewer partitions keep theirs.
     */
   val streamPartitions: Int = sys.env.getOrElse("GRAFT_STREAM_PARTITIONS", "4").toInt
-
-  /** All shared dev/soak session extras, applied on top of the recipe. */
-  val extraConf: Map[String, String] = stateStoreConf
 
   /** The session recipe as a conf map: `local[cpus]`, one shuffle
     * partition per core, UTC. Pure, so a spec pins it. `localDir` is the
@@ -106,7 +89,7 @@ object HarnessConf {
     // 45s periodic GC keeps dead pins reaped at negligible cost
     // (measured at sf10: m4 164.7s → 61.8s).
     "spark.cleaner.periodicGC.interval" -> "45s"
-  ) ++ extraConf
+  )
 
   /** A new session on [[sessionConf]]. Clears the active and default
     * sessions first, so `getOrCreate` cannot hand back an earlier one.

@@ -1,11 +1,15 @@
 package graft.ops
 
 import graft.{Q, Tables}
+import graft.streaming.EventsStream
 import org.apache.spark.sql.functions._
 
 /** Time-window aggregation over the `events` table — the batch twins of
   * the Structured Streaming pipelines in `graft.streaming` (same
-  * operators, same semantics; the streaming variants add watermarks).
+  * operators, same semantics). w2 and w9 run the stream transforms
+  * themselves on the batch table: the optimizer drops a watermark over a
+  * batch frame (`EliminateEventTimeWatermark`), so the plan is the plain
+  * batch aggregate.
   *
   * Tumbling windows shuffle once on (window, key); session windows use
   * Spark's native `session_window`, which sorts within the user partition
@@ -64,11 +68,7 @@ object EventWindows {
       |       COUNT(*) AS n_events
       |FROM numbered GROUP BY user_id, sid
       |ORDER BY user_id, session_start""".stripMargin) { (spark, dir) =>
-    Tables.events(spark, dir)
-      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"), col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"), col("n_events"))
+    EventsStream.sessionCounts(Tables.events(spark, dir))
       .orderBy("user_id", "session_start")
   }
 
@@ -155,13 +155,7 @@ object EventWindows {
       |       CAST(SUM(CAST(value AS DECIMAL(14,2))) AS DOUBLE) AS sum_value
       |FROM expanded
       |GROUP BY 1, 2, 3 ORDER BY window_start, event_type""".stripMargin) { (spark, dir) =>
-    Tables.events(spark, dir)
-      .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(14,2)")).cast("double").as("sum_value"))
-      .select(col("window.start").as("window_start"),
-        col("window.end").as("window_end"),
-        col("event_type"), col("n"), col("sum_value"))
+    EventsStream.hoppingCounts(Tables.events(spark, dir))
       .orderBy("window_start", "event_type")
   }
 

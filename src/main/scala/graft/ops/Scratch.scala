@@ -3,7 +3,7 @@ package graft.ops
 import java.io.File
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The one place in `graft` that makes scratch directories, stages a
   * dataset's derived copy once per JVM, and lays out stream input files.
@@ -13,7 +13,7 @@ import org.apache.spark.sql.DataFrame
   *    sinks and the session's `spark.local.dir` all come from here.
   *  - [[once]]: a JVM-wide memo of staged copies, keyed by (tag, dataset).
   *  - [[Arrivals]]: a directory of stream input files whose modification
-  *    times fix the micro-batch order.
+  *    times fix the micro-batch order, and the stream that reads it.
   *
   * Scratch goes to tmpfs when the platform has one: the state store
   * fsyncs one delta file per partition per operator per micro-batch, and
@@ -95,7 +95,7 @@ private[graft] object Scratch {
     }).asInstanceOf[V]
 
   /** Stream input files in `dir`, one file per micro-batch. The file
-    * source (`maxFilesPerTrigger=1`) takes files in modification-time
+    * source ([[Arrivals.read]]) takes files in modification-time
     * order, so each added file gets t0 + n·60 s, n counting adds:
     * STRICTLY increasing, because the source breaks equal-modtime ties
     * by local-FS readdir order, which follows creation order, i.e. task
@@ -130,6 +130,17 @@ private[graft] object Scratch {
       require(p.toFile.setLastModified(t0 + n * 60000L), s"cannot set the modtime of $p")
       n += 1
     }
+  }
+
+  object Arrivals {
+
+    /** The file stream over an arrivals `dir`: one file per micro-batch,
+      * in arrival order, with the schema read from the staged files (a
+      * file stream needs one up front).
+      */
+    def read(spark: SparkSession, dir: String): DataFrame =
+      spark.readStream.schema(spark.read.parquet(dir).schema)
+        .option("maxFilesPerTrigger", 1).parquet(dir)
   }
 
   /** The parquet files of an [[Arrivals]] dir, in arrival order. */

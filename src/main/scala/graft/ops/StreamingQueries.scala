@@ -1,8 +1,10 @@
 package graft.ops
 
 import graft.{HarnessConf, Q, Tables}
-import graft.streaming.{EventsStream, NioCheckpointFileManager}
+import graft.etl.NioLocalFileSystem
+import graft.streaming.EventsStream
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 
@@ -54,10 +56,14 @@ object StreamingQueries {
     * dwarfs the data, so the stream runs with a bounded partition count
     * (state sharding is per-key within a partition — results are
     * identical; a 100 TB deployment raises it back via the same conf).
-    * Every checkpoint file (offsets, commits, state store) goes through
-    * [[NioCheckpointFileManager]], which starts no process per file. The
-    * session's own settings of both keys are restored however the run
-    * ends; the query's cloned session takes them at `start()`.
+    * Every file the run writes goes through [[NioLocalFileSystem]], which
+    * starts no process per file and writes no `.crc` sidecar: through
+    * Spark's own `FileSystem`-based checkpoint manager (the default
+    * `FileContext` one ignores `fs.file.impl`) for offsets, commits and
+    * the state store, and through the session's Hadoop conf for every
+    * sink file. The session's own settings of these keys are restored
+    * however the run ends; the query's cloned session takes them at
+    * `start()`.
     *
     * Without `checkpoint` the runner makes a scratch checkpoint and
     * deletes it once the query has terminated; a caller-supplied one
@@ -68,7 +74,10 @@ object StreamingQueries {
     val ckpt = checkpoint.getOrElse(Scratch.dir(s"graft_ckpt_$name"))
     val key = "spark.sql.shuffle.partitions"
     val cap = math.min(spark.conf.get(key).toInt, HarnessConf.streamPartitions)
-    HarnessConf.withConf(spark, key -> cap.toString, NioCheckpointFileManager.conf) {
+    HarnessConf.withConf(spark, Seq(key -> cap.toString,
+        "spark.sql.streaming.checkpointFileManagerClass" ->
+          classOf[FileSystemBasedCheckpointFileManager].getName) ++
+        NioLocalFileSystem.writeOptions: _*) {
       sink(df.writeStream
           .outputMode(mode)
           .option("checkpointLocation", ckpt)
@@ -90,7 +99,7 @@ object StreamingQueries {
     * batch leaves the complete answer as parquet whatever the group
     * cardinality (the memory sink kernel-OOM-killed w4's sf100 JVM).
     */
-  private def drained(spark: SparkSession, name: String, df: DataFrame,
+  private[graft] def drained(spark: SparkSession, name: String, df: DataFrame,
       mode: OutputMode): DataFrame = {
     // the overwrite drain is CORRECT ONLY for Complete mode: an Update
     // stream would keep only the last batch's changed rows
@@ -108,21 +117,49 @@ object StreamingQueries {
     spark.read.schema(df.schema).parquet(out)
   }
 
-  /** Keyed versioned snapshots under `root`, the foreachBatch upsert of
-    * w11/w16/w17: batch k merges its rows into snapshot k-1 and writes
-    * snapshot k, so the last snapshot is the merged state.
+  /** The per-batch-directory `foreachBatch` sink: micro-batch `id` is
+    * written, overwriting, to `$root/b<id>`, so a replayed batch id (the
+    * sink is at-least-once) rewrites its own directory and is read back
+    * once. [[all]] reads every batch's directory: w18's sessions and the
+    * incremental applies w22–w25, whose rows are final when emitted.
+    * [[latest]] reads the newest one: the versioned snapshots of
+    * [[BatchDirs.merging]] (w11/w16/w17).
     */
-  private final class Snapshots(root: String,
-      merge: (Option[DataFrame], DataFrame) => DataFrame) {
-    @volatile private var current: Option[String] = None
-    val sink: Sink = batchSink { (batch, batchId) =>
-      val out = s"$root/v$batchId"
-      merge(current.map(batch.sparkSession.read.parquet(_)), batch)
-        .write.mode("overwrite").parquet(out)
-      current = Some(out)
+  private[graft] final class BatchDirs private (root: String,
+      roll: (Option[String], DataFrame) => DataFrame) {
+    private val written = scala.collection.mutable.TreeMap.empty[Long, String]
+
+    /** One micro-batch: `roll` gets the newest EARLIER batch's dir. */
+    def write(batch: DataFrame, id: Long): Unit = {
+      val prev = written.synchronized(written.rangeUntil(id).lastOption.map(_._2))
+      val out = s"$root/b$id"
+      roll(prev, batch).write.mode("overwrite").parquet(out)
+      written.synchronized { written(id) = out }
     }
-    def latest(spark: SparkSession, name: String): DataFrame =
-      spark.read.parquet(current.getOrElse(sys.error(s"$name: no micro-batch ran")))
+
+    val sink: Sink = batchSink(write)
+
+    private def dirs(name: String): Seq[String] = {
+      val ds = written.synchronized(written.values.toSeq)
+      require(ds.nonEmpty, s"$name: no micro-batch ran")
+      ds
+    }
+    def all(spark: SparkSession, name: String): DataFrame = spark.read.parquet(dirs(name): _*)
+    def latest(spark: SparkSession, name: String): DataFrame = spark.read.parquet(dirs(name).last)
+  }
+
+  private[graft] object BatchDirs {
+
+    /** Each batch written as `roll(batch)`. */
+    def apply(root: String)(roll: DataFrame => DataFrame): BatchDirs =
+      new BatchDirs(root, (_, b) => roll(b))
+
+    /** Keyed versioned snapshots, the foreachBatch upsert: batch k merges
+      * its rows into the newest earlier snapshot and writes snapshot k,
+      * so the [[BatchDirs.latest]] snapshot is the merged state.
+      */
+    def merging(root: String)(merge: (Option[DataFrame], DataFrame) => DataFrame): BatchDirs =
+      new BatchDirs(root, (prev, b) => merge(prev.map(b.sparkSession.read.parquet(_)), b))
   }
 
   /** The keyed upsert of the update-mode tumbling counts (w16/w17): a
@@ -130,39 +167,18 @@ object StreamingQueries {
     * event_type) — update mode re-emits a window whenever a batch
     * changes it, so the latest emission is the current count.
     */
-  private def windowUpsert(root: String): Snapshots = {
+  private def windowUpsert(root: String): BatchDirs = {
     val keys = Seq("window_start", "event_type")
-    new Snapshots(root, { (prev, batch) =>
+    BatchDirs.merging(root) { (prev, batch) =>
       val b = batch.select((keys ++ Seq("n", "sum_value")).map(col): _*)
       prev.fold(b)(_.join(b.select(keys.map(col): _*), keys, "left_anti").union(b))
-    })
-  }
-
-  /** foreachBatch sink writing `roll(batch)` to `$root/b$batchId` — the
-    * incremental-apply streams (w22–w25), whose per-batch verdicts are
-    * final because each key lives in exactly one staged file.
-    */
-  private final class BatchDirs(root: String, roll: DataFrame => DataFrame) {
-    private val written = scala.collection.mutable.ListBuffer.empty[String]
-    val sink: Sink = batchSink { (b, batchId) =>
-      val out = s"$root/b$batchId"
-      roll(b).write.mode("overwrite").parquet(out)
-      written.synchronized { written += out; () }
-    }
-    // foreachBatch is at-least-once: a replayed batchId appends its path
-    // twice while the write itself is idempotent (mode overwrite) —
-    // distinct keeps the final read idempotent end-to-end
-    def all(spark: SparkSession, name: String): DataFrame = {
-      val dirs = written.synchronized(written.toSeq.distinct)
-      require(dirs.nonEmpty, s"$name: no micro-batch ran")
-      spark.read.parquet(dirs: _*)
     }
   }
 
   /** The test tables are single parquet FILES; the file streaming source
     * requires a DIRECTORY (at scale an events table is one anyway). Stage
     * the table as TWO ts-range-partitioned files once per (JVM, dataset):
-    * with `maxFilesPerTrigger=1` in [[graft.streaming.EventsStream.read]],
+    * read one file per trigger by [[graft.streaming.EventsStream.read]],
     * AvailableNow then runs two REAL micro-batches in event-time order,
     * so aggregation/session/dedup state genuinely carries across batch
     * boundaries and the watermark advances between batches — a much
@@ -351,19 +367,7 @@ object StreamingQueries {
       | AND p.event_type = 'purchase' AND c.event_type = 'click'
       | AND c.ts >= p.ts - INTERVAL 10 MINUTE AND c.ts < p.ts
       |ORDER BY purchase_id, click_ts""".stripMargin) { (spark, dir) =>
-    val purchases = EventsStream.read(spark, eventsPath(spark, dir))
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-        col("ts").as("p_ts"))
-      .withWatermark("p_ts", "10 minutes")
-    val clicks = EventsStream.read(spark, eventsPath(spark, dir))
-      .filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
-      .withWatermark("c_ts", "10 minutes")
-    val joined = purchases.join(clicks,
-        col("p_user") === col("c_user") &&
-          col("c_ts") >= col("p_ts") - expr("INTERVAL 10 MINUTES") &&
-          col("c_ts") < col("p_ts"))
+    val joined = EventsStream.clickPurchaseJoin(spark, eventsPath(spark, dir), "inner")
       .select(col("purchase_id"), col("p_user").as("user_id"),
         col("p_ts").as("purchase_ts"), col("c_ts").as("click_ts"),
         (unix_micros(col("p_ts")) - unix_micros(col("c_ts"))).as("gap_us"))
@@ -459,12 +463,12 @@ object StreamingQueries {
     def latestPerKey(df: DataFrame): DataFrame = df
       .withColumn("rn", row_number().over(latestW))
       .filter(col("rn") === 1).drop("rn")
-    val snaps = new Snapshots(Scratch.dir("graft_upsert_w11"), { (prev, batch) =>
+    val snaps = BatchDirs.merging(Scratch.dir("graft_upsert_w11")) { (prev, batch) =>
       // collapse the batch to its per-key winners BEFORE touching
       // state — merge IO is then O(|keys in batch|)
       val winners = latestPerKey(batch)
       prev.fold(winners)(p => latestPerKey(p.union(winners)))
-    })
+    }
     val src = EventsStream.read(spark, eventsPath(spark, dir))
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
         col("value"))
@@ -564,21 +568,7 @@ object StreamingQueries {
     * never pushed/collapsed) without driving the stream.
     */
   private[graft] def w13Joined(spark: SparkSession, dir: String): DataFrame = {
-    val staged = eventsPathWithSentinel(spark, dir)
-    val purchases = EventsStream.read(spark, staged)
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-        col("ts").as("p_ts"))
-      .withWatermark("p_ts", "10 minutes")
-    val clicks = EventsStream.read(spark, staged)
-      .filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
-      .withWatermark("c_ts", "10 minutes")
-    purchases.join(clicks,
-        col("p_user") === col("c_user") &&
-          col("c_ts") >= col("p_ts") - expr("INTERVAL 10 MINUTES") &&
-          col("c_ts") < col("p_ts"),
-        "left_outer")
+    EventsStream.clickPurchaseJoin(spark, eventsPathWithSentinel(spark, dir), "left_outer")
       // sentinel drop — see eventsPathWithSentinel: must be a BOTH-sides
       // predicate (coalesce), never p_user alone, or it pushes to the scan
       .filter(coalesce(col("p_user"), col("c_user")) >= 0)
@@ -622,22 +612,8 @@ object StreamingQueries {
 
   /** w14's joined frame pre-sink — see [[w13Joined]]. */
   private[graft] def w14Joined(spark: SparkSession, dir: String): DataFrame = {
-    val staged = eventsPathWithSentinel(spark, dir)
-    val purchases = EventsStream.read(spark, staged)
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-        col("ts").as("p_ts"))
-      .withWatermark("p_ts", "10 minutes")
-    val clicks = EventsStream.read(spark, staged)
-      .filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
-        col("ts").as("c_ts"))
-      .withWatermark("c_ts", "10 minutes")
-    purchases.join(clicks,
-        col("p_user") === col("c_user") &&
-          col("c_ts") >= col("p_ts") - expr("INTERVAL 10 MINUTES") &&
-          col("c_ts") < col("p_ts"),
-        "full_outer")
+    EventsStream.clickPurchaseJoin(spark, eventsPathWithSentinel(spark, dir), "full_outer",
+        clickId = true)
       // sentinel drop — see eventsPathWithSentinel: coalesce keeps the
       // predicate un-pushable and the join un-eliminable
       .filter(coalesce(col("p_user"), col("c_user")) >= 0)
@@ -821,10 +797,9 @@ object StreamingQueries {
     *  - lost timeout registrations leave run-1 sessions stuck in state
     *    forever — rows go missing.
     *
-    * Sink is an append-only parquet dir (sessions emit exactly once, on
-    * close); AvailableNow commits every batch before terminating, so no
-    * batch replays across the clean restart (a mid-batch crash would
-    * need a batchId-keyed idempotent write — w11/w16's upsert shape).
+    * Sink is one parquet dir per micro-batch ([[BatchDirs]]; sessions
+    * emit exactly once, on close), so a batch replayed after a mid-batch
+    * crash rewrites its own dir instead of appending its sessions twice.
     */
   val w18StreamStateRestart: Q = Q.sql(
     "w18_stream_state_restart",
@@ -857,13 +832,12 @@ object StreamingQueries {
     val src = new Scratch.Arrivals(Scratch.dir("graft_w18_src"))
     val ckpt = Scratch.dir("graft_ckpt_w18")
     w18LastCkpt = ckpt
-    val sink = Scratch.dir("graft_w18_sink")
+    val sessions = BatchDirs(Scratch.dir("graft_w18_sink"))(identity)
     def runPhase(): Unit = {
       val ev = EventsStream.read(spark, src.dir).as[EventsStream.Event]
-      val sessions = EventsStream.timeoutSessions(ev).toDF()
-        .filter(col("user_id") >= 0)
-      runStream(spark, "w18_stream_state_restart", sessions, OutputMode.Append(),
-        batchSink((batch, _) => batch.write.mode("append").parquet(sink)), Some(ckpt))
+      runStream(spark, "w18_stream_state_restart",
+        EventsStream.timeoutSessions(ev).toDF().filter(col("user_id") >= 0),
+        OutputMode.Append(), sessions.sink, Some(ckpt))
     }
     // half 1: every active session is OPEN in the state store when
     // this run terminates
@@ -873,7 +847,7 @@ object StreamingQueries {
     // must resume the open sessions from the checkpointed state
     (dataParts(1) +: sentinels).foreach(src.add)
     runPhase()
-    spark.read.parquet(sink)
+    sessions.all(spark, "w18")
       .select(col("user_id"), col("session_start"), col("session_end"),
         col("n_events"))
       .orderBy("user_id", "session_start")
@@ -940,20 +914,8 @@ object StreamingQueries {
 
   /** w19's joined frame pre-sink — exposed for the PlanSpec pin. */
   private[graft] def w19Joined(spark: SparkSession, dir: String): DataFrame = {
-    val purchases = EventsStream.read(spark, eventsPath(spark, dir))
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-        col("ts").as("p_ts"), col("value").cast("double").as("purchase_value"))
-      .withWatermark("p_ts", "10 minutes")
-    val clicks = EventsStream.read(spark, eventsPath(spark, dir))
-      .filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
-      .withWatermark("c_ts", "10 minutes")
-    purchases.join(clicks,
-        col("p_user") === col("c_user") &&
-          col("c_ts") >= col("p_ts") - expr("INTERVAL 10 MINUTES") &&
-          col("c_ts") < col("p_ts"),
-        "left_semi")
+    EventsStream.clickPurchaseJoin(spark, eventsPath(spark, dir), "left_semi",
+        purchaseValue = Some(col("value").cast("double").as("purchase_value")))
       .select(col("purchase_id"), col("p_user").as("user_id"),
         col("p_ts").as("purchase_ts"), col("purchase_value"))
   }
@@ -1061,19 +1023,9 @@ object StreamingQueries {
 
   /** w21's chained frame pre-sink — exposed for the PlanSpec pin. */
   private[graft] def w21Chained(spark: SparkSession, dir: String): DataFrame = {
-    val purchases = EventsStream.read(spark, eventsPath(spark, dir))
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-        col("value").cast("decimal(14,2)").as("pv"))
-      .withWatermark("p_ts", "10 minutes")
-    val clicks = EventsStream.read(spark, eventsPath(spark, dir))
-      .filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
-      .withWatermark("c_ts", "10 minutes")
-    purchases.join(clicks,
-        col("p_user") === col("c_user") &&
-          col("c_ts") >= col("p_ts") - expr("INTERVAL 10 MINUTES") &&
-          col("c_ts") < col("p_ts"))
+    EventsStream.clickPurchaseJoin(spark, eventsPath(spark, dir), "inner",
+        purchaseId = false,
+        purchaseValue = Some(col("value").cast("decimal(14,2)").as("pv")))
       .groupBy(window(col("p_ts"), "1 hour"))
       .agg(count(lit(1)).as("n_pairs"),
         sum(col("pv")).cast("double").as("sum_value"))
@@ -1132,7 +1084,7 @@ object StreamingQueries {
     "w22_stream_incremental_dedup",
     "Streaming incremental LSH apply: new-doc stream probes the persisted band index in-plan; verdicts equal batch d13 row-for-row.",
     Dedup.d13IncrementalMinHash.oracle.get) { (spark, dir) =>
-    val verdicts = new BatchDirs(Scratch.dir("graft_w22_verdicts"), { b =>
+    val verdicts = BatchDirs(Scratch.dir("graft_w22_verdicts")) { b =>
       // batch-local rollup: dedup the per-pair band multiplicity, then
       // one aggregate per new doc — mirrors Dedup.d13's roll exactly
       val pairs = b.filter(col("corpus_doc").isNotNull)
@@ -1149,7 +1101,7 @@ object StreamingQueries {
           col("dup_of"),
           when(coalesce(col("n_dups"), lit(0L)) === 0, lit(1))
             .otherwise(lit(0)).as("admit"))
-    })
+    }
     runStream(spark, "w22_stream_incremental_dedup", w22Stream(spark, dir),
       OutputMode.Append(), verdicts.sink)
     verdicts.all(spark, "w22").orderBy("doc_id")
@@ -1172,12 +1124,10 @@ object StreamingQueries {
     val corpusSh = Dedup.shingledDocs(spark, dir)
       .filter(col("doc_id") % Dedup.D13_MOD =!= Dedup.D13_RES)
       .select(col("doc_id").as("cs_id"), col("s").as("cs"))
-    val sch = spark.read.parquet(staged).schema
     val nCommon = intersectCount(col("s"), col("cs"))
     val j = nCommon.cast("double") /
       (size(col("s")) + size(col("cs")) - nCommon)
-    spark.readStream.schema(sch)
-      .option("maxFilesPerTrigger", 1).parquet(staged)
+    Scratch.Arrivals.read(spark, staged)
       .select(col("doc_id").as("new_doc"), shingles(col("text"), 3).as("s"))
       .filter(size(col("s")) > 0)
       .select(col("new_doc"), col("s"),
@@ -1236,7 +1186,7 @@ object StreamingQueries {
     "Streaming incremental ANN apply: new-vector stream probes the persisted IVF+SQ8 index in-plan; verdicts equal batch s21 row-for-row.",
     Similarity.s21IncrementalAnnApply.oracle.get) { (spark, dir) =>
     import org.apache.spark.sql.expressions.Window
-    val verdicts = new BatchDirs(Scratch.dir("graft_w23_verdicts"), { b =>
+    val verdicts = BatchDirs(Scratch.dir("graft_w23_verdicts")) { b =>
       // batch-local shortlist → refine → rollup, mirroring batch s21
       // stage-for-stage (Similarity.scala s21IncrementalAnnApply):
       // prune to the top-K by the codegen'd integer dot FIRST, and
@@ -1277,7 +1227,7 @@ object StreamingQueries {
           coalesce(col("n_dups"), lit(0L)).as("n_dups"),
           when(coalesce(col("n_dups"), lit(0L)) === 0, lit(1L))
             .otherwise(lit(0L)).as("admit"))
-    })
+    }
     runStream(spark, "w23_stream_incremental_ann", w23Stream(spark, dir),
       OutputMode.Append(), verdicts.sink)
     verdicts.all(spark, "w23").orderBy("vec_id")
@@ -1305,9 +1255,7 @@ object StreamingQueries {
     // build and the oracle use — the stream's bucket ids must match the
     // standing index's exactly
     val np = Similarity.annPlanes(Dedup.normedVectors(spark, dir).count())
-    val sch = spark.read.parquet(staged).schema
-    spark.readStream.schema(sch)
-      .option("maxFilesPerTrigger", 1).parquet(staged)
+    Scratch.Arrivals.read(spark, staged)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("k", lit(1))
       .join(cb, "k")
@@ -1355,7 +1303,7 @@ object StreamingQueries {
     "w24_stream_incremental_edges",
     "Streaming incremental edge apply: new-edge stream probes the pinned standing adjacency in-plan; verdicts equal batch g11 row-for-row.",
     Graph.g11IncrementalEdges.oracle.get) { (spark, dir) =>
-    val verdicts = new BatchDirs(Scratch.dir("graft_w24_verdicts"), { b =>
+    val verdicts = BatchDirs(Scratch.dir("graft_w24_verdicts")) { b =>
       // batch-local rollup: one aggregate per arriving edge — count the
       // common-neighbor hits, carry the (constant-per-edge) degrees,
       // then g11's verdict expressions verbatim
@@ -1374,7 +1322,7 @@ object StreamingQueries {
             .as("jaccard_ppm"),
           when(cnC >= Graph.LP_MIN_CN, lit(1L)).otherwise(lit(0L))
             .as("predicted"))
-    })
+    }
     runStream(spark, "w24_stream_incremental_edges", w24Stream(spark, dir),
       OutputMode.Append(), verdicts.sink)
     verdicts.all(spark, "w24").orderBy("supp_x", "supp_y")
@@ -1396,9 +1344,7 @@ object StreamingQueries {
       .select(col("node").as("x"), col("d").as("deg_x"))
     val degY = Graph.standingDeg(spark, dir)
       .select(col("node").as("y"), col("d").as("deg_y"))
-    val sch = spark.read.parquet(staged).schema
-    spark.readStream.schema(sch)
-      .option("maxFilesPerTrigger", 1).parquet(staged)
+    Scratch.Arrivals.read(spark, staged)
       .join(sedA, Seq("x"), "left_outer")       // neighbors of x
       .join(sedB, Seq("y", "na"), "left_outer") // hit iff also neighbor of y
       .join(degX, Seq("x"), "left_outer")
@@ -1429,7 +1375,7 @@ object StreamingQueries {
     "w25_stream_incremental_payloads",
     "Streaming incremental payload apply: new-payload stream signs against the standing SimHash center and probes the persisted band index in-plan; verdicts equal batch m16 row-for-row.",
     Multimodal.m16IncrementalPayloads.oracle.get) { (spark, dir) =>
-    val verdicts = new BatchDirs(Scratch.dir("graft_w25_verdicts"), { b =>
+    val verdicts = BatchDirs(Scratch.dir("graft_w25_verdicts")) { b =>
       // batch-local rollup — mirrors m16's roll exactly over the
       // GROUPED candidates (bands are disjoint by construction, so
       // groups need no distinct; cnt-weighted sums reconstruct the
@@ -1449,7 +1395,7 @@ object StreamingQueries {
           col("dup_of"),
           when(coalesce(col("n_dups"), lit(0L)) === 0, lit(1L))
             .otherwise(lit(0L)).as("admit"))
-    })
+    }
     runStream(spark, "w25_stream_incremental_payloads", w25Stream(spark, dir),
       OutputMode.Append(), verdicts.sink)
     verdicts.all(spark, "w25").orderBy("doc_id")
@@ -1482,9 +1428,7 @@ object StreamingQueries {
       col("min_doc"), (col("sig_b") % 256).as("band2")))
     val idx1 = broadcast(grp.select(col("sig_b"), col("cnt"),
       col("min_doc"), expr("sig_b div 256").as("band2")))
-    val sch = spark.read.parquet(staged).schema
-    val s = spark.readStream.schema(sch)
-      .option("maxFilesPerTrigger", 1).parquet(staged)
+    val s = Scratch.Arrivals.read(spark, staged)
       .filter(length(col("text")) > 0)
       // histogram + total as BOUND COLUMNS of their own projections:
       // inlined into the per-plane signing fold they are re-evaluated

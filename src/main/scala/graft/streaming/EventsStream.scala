@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -32,24 +32,51 @@ object EventsStream {
   /** state-store record for statefulSessions (public: encoder codegen needs the ctor) */
   final case class SessionState(start: Long, last: Long, n: Long)
 
-  /** Streaming source over a parquet directory of events files. One file
-    * per micro-batch: the staged directory is ts-range-partitioned (see
+  /** Streaming source over a staged directory of events files
+    * ([[graft.ops.Scratch.Arrivals.read]]: one file per micro-batch). The
+    * staged directory is ts-range-partitioned (see
     * `ops.StreamingQueries.eventsPath`), so batches arrive in event-time
     * order and state/watermark progression across batches is exercised
     * for real without any late-drop divergence from the batch oracle.
+    * Staged dirs carry the canonical raw-ns LONG ts, while raw driver
+    * files may be TIMESTAMP(MICROS) — both normalize to TimestampType µs
+    * exactly like graft.Tables.events.
     */
   def read(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // infer the stream schema from the files themselves (one metadata-only
-    // batch read): staged dirs carry the canonical raw-ns LONG ts
-    // (ops.StreamingQueries.eventsPath), while raw driver files may be
-    // TIMESTAMP(MICROS) — normalize both to TimestampType µs exactly like
-    // graft.Tables.events
-    val sch = spark.read.parquet(dir).schema
-    graft.Tables.eventsTs(spark.readStream
-      .schema(sch)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dir))
+    graft.Tables.eventsTs(graft.ops.Scratch.Arrivals.read(spark, dir))
+  }
+
+  /** The click→purchase band join of the stream-stream join queries:
+    * each purchase meets the same user's clicks of the 10 minutes before
+    * it, as join type `how`. Each side is its own [[read]] of `dir`,
+    * filtered to its event type and watermarked by 10 minutes, and the
+    * band bounds the event-time distance between the sides, so each
+    * side's state store holds only a ~10-minute horizon of rows (the
+    * unbounded-state hazard of stream-stream joins is what the bound
+    * exists to prevent).
+    *
+    * Purchases carry `p_user` and `p_ts`, after `purchase_id` when
+    * `purchaseId` and before `purchaseValue` when given; clicks carry
+    * `c_user` and `c_ts`, after `click_id` when `clickId`. Nothing else
+    * enters the join state.
+    */
+  def clickPurchaseJoin(spark: SparkSession, dir: String, how: String,
+      purchaseId: Boolean = true, purchaseValue: Option[Column] = None,
+      clickId: Boolean = false): DataFrame = {
+    def side(eventType: String, p: String, id: Option[String], carried: Option[Column]) =
+      read(spark, dir)
+        .filter(col("event_type") === eventType)
+        .select(id.map(col("event_id").as(_)).toSeq ++
+          Seq(col("user_id").as(s"${p}_user"), col("ts").as(s"${p}_ts")) ++ carried: _*)
+        .withWatermark(s"${p}_ts", "10 minutes")
+    val purchases = side("purchase", "p", Option.when(purchaseId)("purchase_id"), purchaseValue)
+    val clicks = side("click", "c", Option.when(clickId)("click_id"), None)
+    purchases.join(clicks,
+      col("p_user") === col("c_user") &&
+        col("c_ts") >= col("p_ts") - expr("INTERVAL 10 MINUTES") &&
+        col("c_ts") < col("p_ts"),
+      how)
   }
 
   /** Tumbling 1h counts with a 10-minute watermark — late events beyond

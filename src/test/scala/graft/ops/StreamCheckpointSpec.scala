@@ -10,10 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
 
-/** What a [[StreamingQueries.runStream]] checkpoint holds on disk: the
-  * offset and commit logs and the state store, written raw through
-  * `graft.streaming.NioCheckpointFileManager` (no Hadoop `.<name>.crc`
-  * sidecars), and a log that a later run on the same checkpoint resumes.
+/** What a [[StreamingQueries.runStream]] run leaves on disk: a
+  * checkpoint holding the offset and commit logs and the state store, and
+  * a log that a later run on the same checkpoint resumes. Checkpoint and
+  * sink files alike are written raw through `graft.etl.NioLocalFileSystem`,
+  * so neither holds a Hadoop `.<name>.crc` sidecar.
   *
   * The state store's `<n>.delta.crc` files are Spark's own checkpoint
   * checksums (`spark.sql.streaming.checkpoint.fileChecksum.enabled`),
@@ -41,6 +42,9 @@ class StreamCheckpointSpec extends AnyFunSuite {
     ids.asScala.toSeq
   }
 
+  private def sidecars(root: String): Seq[String] =
+    files(root).map(_.getName).filter(n => n.startsWith(".") && n.endsWith(".crc"))
+
   private def files(root: String): Seq[File] = {
     val walk = java.nio.file.Files.walk(new File(root).toPath)
     try walk.iterator().asScala.map(_.toFile).filter(_.isFile).toList
@@ -65,8 +69,7 @@ class StreamCheckpointSpec extends AnyFunSuite {
       Seq("offsets", "commits", "state").foreach { sub =>
         assert(files(s"$ckpt/$sub").nonEmpty, s"no files under $sub/")
       }
-      val crc = files(ckpt).map(_.getName).filter(n => n.startsWith(".") && n.endsWith(".crc"))
-      assert(crc.isEmpty, s"checksum sidecars under the checkpoint: $crc")
+      assert(sidecars(ckpt).isEmpty, s"checksum sidecars under the checkpoint: ${sidecars(ckpt)}")
     }
   }
 
@@ -84,5 +87,36 @@ class StreamCheckpointSpec extends AnyFunSuite {
       assert(batchIds(ckpt, "commits") == offsets)
       assert((first ++ second).distinct.sorted == offsets)
     }
+  }
+
+  /** Drains `stream(src)` over two arrivals; returns the sink dir. */
+  private def drainedSink(name: String, mode: OutputMode)(
+      stream: Scratch.Arrivals => org.apache.spark.sql.DataFrame): String = {
+    val src = new Scratch.Arrivals(Scratch.dir("graft_ckpt_spec_src"))
+    try {
+      src.add("a.parquet", half(0))
+      src.add("b.parquet", half(1))
+      val files = StreamingQueries.drained(spark, name, stream(src), mode).inputFiles
+      assert(files.nonEmpty, s"$name: the drained sink holds no rows")
+      new File(new java.net.URI(files.head)).getParent
+    } finally Scratch.drop(src.dir)
+  }
+
+  test("a drained Append run (w5 shape) leaves no .crc sidecar under its sink") {
+    val sink = drainedSink("ckpt_spec_append", OutputMode.Append()) { src =>
+      EventsStream.dedupedEvents(
+        EventsStream.read(spark, src.dir).union(EventsStream.read(spark, src.dir)))
+    }
+    assert(new File(sink, "_spark_metadata").isDirectory, s"not a file sink: $sink")
+    try assert(sidecars(sink).isEmpty, s"checksum sidecars under the sink: ${sidecars(sink)}")
+    finally Scratch.drop(sink)
+  }
+
+  test("a drained Complete run (w3 shape) leaves no .crc sidecar under its sink") {
+    val sink = drainedSink("ckpt_spec_complete", OutputMode.Complete()) { src =>
+      EventsStream.tumblingCounts(EventsStream.read(spark, src.dir))
+    }
+    try assert(sidecars(sink).isEmpty, s"checksum sidecars under the sink: ${sidecars(sink)}")
+    finally Scratch.drop(sink)
   }
 }

@@ -1,7 +1,9 @@
 package graft.ops
 
 import graft.{HarnessConf, Tables, TestSpark}
-import graft.streaming.{EventsStream, NioCheckpointFileManager}
+import graft.etl.NioLocalFileSystem
+import graft.streaming.EventsStream
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener}
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,16 +11,24 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** The one stream runner ([[StreamingQueries.runStream]]): the session's
-  * shuffle partition count is capped and the checkpoint file manager set
-  * for the run, both restored however it ends, and the checkpoint the
-  * runner made itself is freed once the query terminates while the
-  * drained sink stays readable.
+  * shuffle partition count is capped, and Spark's `FileSystem`-based
+  * checkpoint manager and the [[NioLocalFileSystem]] write options are
+  * set, for the run; every key is restored however it ends. The
+  * checkpoint the runner made itself is freed once the query terminates
+  * while the drained sink stays readable.
   */
 class StreamRunnerSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf0001
   private val key = "spark.sql.shuffle.partitions"
-  private val (managerKey, manager) = NioCheckpointFileManager.conf
+  // what the run sets besides the cap: unset in the test session
+  private val runConf: Map[String, String] = NioLocalFileSystem.writeOptions +
+    ("spark.sql.streaming.checkpointFileManagerClass" ->
+      classOf[FileSystemBasedCheckpointFileManager].getName)
+  private def runKeys(conf: org.apache.spark.sql.RuntimeConfig): Map[String, Option[String]] =
+    runConf.keys.map(k => k -> conf.getOption(k)).toMap
+  private val inRun = runConf.map { case (k, v) => k -> Some(v) }
+  private val unset = runConf.map { case (k, _) => k -> None }
   // above the stream cap, so the runner has something to cap and restore
   private val wide = (HarnessConf.streamPartitions + 3).toString
 
@@ -35,26 +45,32 @@ class StreamRunnerSpec extends AnyFunSuite {
 
   test("runStream caps shuffle partitions for the run and restores them after") {
     HarnessConf.withConf(spark, key -> wide) {
-      val seen = new java.util.concurrent.atomic.AtomicReference[(String, Option[String])]()
+      assert(runKeys(spark.conf) == unset)
+      val seen = new java.util.concurrent.atomic.AtomicReference[(String, Map[String, Option[String]])]()
       StreamingQueries.runStream(spark, "runner_spec_ok", ids, OutputMode.Append(),
         StreamingQueries.batchSink((b, _) =>
-          seen.set((b.sparkSession.conf.get(key), b.sparkSession.conf.getOption(managerKey)))))
-      assert(seen.get == ((HarnessConf.streamPartitions.toString, Some(manager))))
+          seen.set((b.sparkSession.conf.get(key), runKeys(b.sparkSession.conf)))))
+      assert(seen.get == ((HarnessConf.streamPartitions.toString, inRun)))
       assert(spark.conf.get(key) == wide)
-      assert(spark.conf.getOption(managerKey).isEmpty)
+      assert(runKeys(spark.conf) == unset)
     }
   }
 
   test("runStream restores shuffle partitions after a run whose sink throws") {
     HarnessConf.withConf(spark, key -> wide) {
+      val seen = new java.util.concurrent.atomic.AtomicReference[Map[String, Option[String]]]()
       val e = intercept[Exception] {
         StreamingQueries.runStream(spark, "runner_spec_fail", ids, OutputMode.Append(),
-          StreamingQueries.batchSink((_, _) => throw new IllegalStateException("sink failed")))
+          StreamingQueries.batchSink { (b, _) =>
+            seen.set(runKeys(b.sparkSession.conf))
+            throw new IllegalStateException("sink failed")
+          })
       }
       assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
         .exists(t => String.valueOf(t.getMessage).contains("sink failed")), e)
+      assert(seen.get == inRun)
       assert(spark.conf.get(key) == wide)
-      assert(spark.conf.getOption(managerKey).isEmpty)
+      assert(runKeys(spark.conf) == unset)
     }
   }
 
